@@ -1,6 +1,7 @@
 """Lineage-truncation helper shared by the iterative / reused-subtree
 operators (dd09/dd10 connected components, llm01/llm02 near-dup band
-reuse, ev04/x25 tiny shared aggregates).
+reuse, ev04/x25 tiny shared aggregates) and by the offline ingest
+pipeline (ingest/pipeline.py: one fetch batch feeds every sink).
 
 Why localCheckpoint: these plans either iterate (lineage grows per
 round) or reuse one small subtree from two pruning-divergent branches

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from api_etl_pipeline_spark.ingest.storage import BLOBS_COLUMNS, read_sink
+
 DEDUP_KEYS = ("source_url", "sha256")
 
 
@@ -55,12 +57,9 @@ def write_blobs(df: DataFrame, blob_root: str) -> None:
     append; the 2-char prefix keeps directory fan-out bounded (256 dirs)
     and aligns file layout with the dedup shuffle partitioning."""
     new = df.select(F.col("sha256"), F.col("body")).dropDuplicates(["sha256"])
-    try:
-        existing = new.sparkSession.read.parquet(blob_root).select("sha256")
-    except Exception:
-        existing = None
+    existing = read_sink(new.sparkSession, blob_root, BLOBS_COLUMNS)
     if existing is not None:
-        new = new.join(existing, "sha256", "left_anti")
+        new = new.join(existing.select("sha256"), "sha256", "left_anti")
     (
         new.withColumn("bucket", blob_bucket(F.col("sha256")))
         .write.mode("append")

@@ -19,24 +19,41 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SYNTH_HEADERS = '{"content-type": "application/json"}'
+PLAN_SCHEMA = "item_index int, item_key string, fixture_name string, url string"
 
 
 def plan_source(spark: SparkSession, items: list[dict], limit: int = 1) -> DataFrame:
     """The run's work-item table (S12; base.py:18-20). Applies the
-    reference's min-1 limit guard (F11: `[:max(limit, 1)]`)."""
-    n = max(limit, 1)
-    rows = [(i, item.get("cik10") or item.get("q") or "", item["fixture_name"], item["url"])
-            for i, item in enumerate(items[:n])]
-    return spark.createDataFrame(
-        rows, "item_index int, item_key string, fixture_name string, url string"
+    reference's min-1 limit guard (F11: `[:max(limit, 1)]`).
+
+    The rows are an inline `VALUES` table whose cells are bound named
+    parameters, so the plan is a JVM-local `LocalTableScan`: no Python
+    worker runs for the jobs that read it, and no item string is ever
+    spliced into SQL text."""
+    rows = items[: max(limit, 1)]
+    if not rows:  # VALUES needs a row; an empty plan has nothing to run
+        return spark.createDataFrame([], PLAN_SCHEMA)
+    args: dict[str, object] = {}
+    for i, item in enumerate(rows):
+        args |= {
+            f"i{i}": i,
+            f"k{i}": item.get("cik10") or item.get("q") or "",
+            f"f{i}": item["fixture_name"],
+            f"u{i}": item["url"],
+        }
+    values = ", ".join(f"(:i{i}, :k{i}, :f{i}, :u{i})" for i in range(len(rows)))
+    return spark.sql(
+        f"SELECT * FROM VALUES {values} AS plan(item_index, item_key, fixture_name, url)",
+        args=args,
     )
 
 
 def fixture_scan(spark: SparkSession, fixture_root: str, provider: str) -> DataFrame:
     """Read every fixture for a provider as bytes (S1). Returns
-    (fixture_name, body) — the binaryFile source pushes the path filter
-    down and parallelizes per file."""
-    df = spark.read.format("binaryFile").load(f"{fixture_root}/{provider}/*")
+    (fixture_name, body) — the binaryFile source parallelizes per file.
+    The provider directory itself is loaded, not a glob under it: a glob
+    makes the file-sink metadata probe log a not-found trace per load."""
+    df = spark.read.format("binaryFile").load(f"{fixture_root}/{provider}")
     return df.select(
         F.element_at(F.split(F.col("path"), "/"), -1).alias("fixture_name"),
         F.col("content").alias("body"),

@@ -12,6 +12,7 @@ import shutil
 from pathlib import Path
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from api_etl_pipeline_spark.ingest import parse as P
@@ -273,3 +274,81 @@ def test_run_id_collision_parity(spark):
 
     runs = spark.createDataFrame([(first,), (second,)], ["run_id"])
     assert build_run_id(runs, "p", now) == third
+
+
+def test_plan_source_is_local_and_binds_values(spark):
+    """The plan table is a JVM-local relation (no Python worker reads it)
+    and item strings are bound as parameters, never spliced into SQL."""
+    url = "https://x/it's \"quoted\"?a=1' OR '1'='1"
+    items = [{"cik10": "0001112233", "fixture_name": "o'brien.json", "url": url},
+             {"q": "reactor", "fixture_name": "b", "url": "u2"}]
+    plan = plan_source(spark, items, limit=2)
+    assert plan._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
+    assert [tuple(r) for r in plan.collect()] == [
+        (0, "0001112233", "o'brien.json", url),
+        (1, "reactor", "b", "u2"),
+    ]
+    assert plan.dtypes == [("item_index", "int"), ("item_key", "string"),
+                           ("fixture_name", "string"), ("url", "string")]
+
+
+# jobs one warm op runs on a local[4] session, the same in every measured
+# repeat: the fixture broadcasts, the batch checkpoint, the four sink
+# writes and the query stages of the two dedup anti-joins
+WARM_OP_MAX_JOBS = 13
+
+
+def test_warm_op_job_count(spark, tmp_path):
+    wh = str(tmp_path / "wh")
+    run_offline_ingest(spark, "sec_edgar", FIXTURES, warehouse=wh)
+    sc = spark.sparkContext
+    group = f"warm-op-{tmp_path.name}"
+    sc.setJobGroup(group, "one warm ingest op")
+    try:
+        res = run_offline_ingest(spark, "nrc_adams_aps", FIXTURES, warehouse=wh)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (res.responses, res.artifacts, res.parse_errors) == (2, 1, 0)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= WARM_OP_MAX_JOBS
+
+
+@pytest.mark.parametrize("provider,fixture", [
+    ("sec_edgar", "submissions.json"),
+    ("nrc_adams_aps", "search.json"),
+])
+def test_corrupt_fixture_quarantines_into_warehouse(spark, tmp_path, provider, fixture):
+    """The warehouse path counts parse errors through the responses-write
+    observation; the runs row carries the same counts, and the quarantine
+    row keeps the metadata response's id (J3)."""
+    root = tmp_path / "fixtures"
+    shutil.copytree(FIXTURES, root)
+    (root / provider / fixture).write_text("{}")
+    wh = str(tmp_path / "wh")
+    res = run_offline_ingest(spark, provider, str(root), warehouse=wh, run_id="run-bad")
+    assert (res.responses, res.artifacts, res.parse_errors) == (1, 0, 1)
+    run = spark.read.json(f"{wh}/runs").collect()
+    assert [(r.run_id, r.responses, r.artifacts, r.parse_errors) for r in run] == [
+        ("run-bad", 1, 0, 1)
+    ]
+    err = res.errors_df.collect()
+    meta = spark.read.parquet(f"{wh}/responses").collect()
+    assert len(err) == 1 and len(meta) == 1
+    expected_id = spark.range(1).select(
+        F.xxhash64(F.lit(provider), F.lit(meta[0].url), F.lit(0)).alias("id")
+    ).first().id
+    assert err[0].response_id == expected_id and err[0].url == meta[0].url
+
+
+def test_unreadable_artifacts_sink_raises(spark, tmp_path):
+    """An artifacts sink that exists but cannot be read must fail the run;
+    reading it as "no sink" would dedup against nothing and re-insert."""
+    wh = tmp_path / "wh"
+    run_offline_ingest(spark, "sec_edgar", FIXTURES, warehouse=str(wh))
+    parts = sorted((wh / "artifacts").glob("part-*"))
+    assert parts
+    for p in parts:
+        p.write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        run_offline_ingest(spark, "sec_edgar", FIXTURES, warehouse=str(wh))
+    assert sorted((wh / "artifacts").glob("part-*")) == parts
