@@ -45,9 +45,7 @@ def dedup_insert(new_rows: DataFrame, existing: DataFrame | None, keys=DEDUP_KEY
     batch_unique = new_rows.dropDuplicates(list(keys))
     if existing is None:
         return batch_unique
-    return batch_unique.join(
-        existing.select(*keys).dropDuplicates(list(keys)), on=list(keys), how="left_anti"
-    )
+    return batch_unique.join(existing.select(*keys), on=list(keys), how="left_anti")
 
 
 def write_blobs(df: DataFrame, blob_root: str) -> None:
@@ -192,7 +190,5 @@ def dedup_insert_bloom(
     tagged = batch_unique.withColumn("_maybe_dup", _maybe_dup(positions()))
     definite_new = tagged.filter(~F.col("_maybe_dup")).drop("_maybe_dup")
     candidates = tagged.filter(F.col("_maybe_dup")).drop("_maybe_dup")
-    settled = candidates.join(
-        existing.select(*keys).dropDuplicates(list(keys)), on=list(keys), how="left_anti"
-    )
+    settled = candidates.join(existing.select(*keys), on=list(keys), how="left_anti")
     return definite_new.unionByName(settled)

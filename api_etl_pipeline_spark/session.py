@@ -36,18 +36,6 @@ def get_spark(app_name: str = "api_etl_pipeline_spark") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r15 sweep knob (guide §3.1/§9): false lets the planner pick a
-        # shuffled hash join where its size conditions hold (skips the
-        # sort). Parameterized for the A/B; the measured registry-wide
-        # static-plan diff is 3 queries (llm02, q48, samp06 — SMJ->SHJ,
-        # same exchange counts). Default stays Spark's (true): the A/B
-        # at sf0.1 was inside run-to-run noise on those three walls and
-        # a global planner flip is not worth re-fingerprinting every
-        # plan for noise — see OPTIMIZATION_r15.md §preferSortMergeJoin.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
         .config("spark.sql.session.timeZone", "UTC")
         # the NRC envelope schema carries both key casings (results/Results,
         # Url/url — nrc_adams_aps.py:92-111); resolving them needs

@@ -460,6 +460,64 @@ def shared_walls() -> dict[str, float]:
     return out
 
 
+def warm(spark, data_dir: str) -> None:
+    """Warm the page cache and the JVM before anything is timed. When a
+    relayout is REUSED (prepare cost 0) its files may be cold on disk,
+    unlike the run that wrote them — which skews the first-timed queries
+    (observed round 3: layout_prepare_sec 0.0 and the early queries 2x
+    their round-2 times). So every table is touched once, then the
+    flagship query runs once to pay session/codegen startup."""
+    from api_etl_pipeline_spark.tables import TABLES, load_table
+
+    for t in TABLES:
+        load_table(spark, data_dir, t).write.mode("overwrite").format("noop").save()
+    all_queries()["q01_pricing_summary"].fn(spark, data_dir).write.mode(
+        "overwrite"
+    ).format("noop").save()
+
+
+# A construction that performs NO checkpoint builds a PURE plan: nothing
+# is materialized at construction time, so re-running fn() per timing run
+# only repeats identical py4j/Catalyst work while every noop execution
+# computes from the parquet scans regardless of which handle it runs on.
+_PURE_CONSTRUCTIONS = 2
+
+
+def measure(spark, fn, data_dir: str, runs: int) -> tuple[float, float]:
+    """Time query ``fn`` on ``data_dir``: returns (min construction wall,
+    min ``noop`` execution wall) over ``runs`` runs, in seconds.
+
+    Pure constructions (detected by ``checkpoint.CHECKPOINT_SEQ``, not an
+    allowlist) run ``_PURE_CONSTRUCTIONS`` times, so the construction min
+    is taken over a warm sample, and their handle is reused for the
+    remaining runs. A query that checkpoints is constructed fresh for
+    every run: reusing its handle would let runs 2..n read run 1's
+    materialized blocks inside the timed region. The timed noop region is
+    the same either way; every run computes from the parquet scans."""
+    from api_etl_pipeline_spark import checkpoint
+
+    cbest = best = cached = None
+    pure_builds = 0
+    for _ in range(runs):
+        if cached is None:
+            seq0 = checkpoint.CHECKPOINT_SEQ
+            c0 = time.perf_counter()
+            df = fn(spark, data_dir)
+            dt = time.perf_counter() - c0
+            cbest = dt if cbest is None else min(cbest, dt)
+            if checkpoint.CHECKPOINT_SEQ == seq0:
+                pure_builds += 1
+                if pure_builds >= _PURE_CONSTRUCTIONS:
+                    cached = df
+        else:
+            df = cached
+        t0 = time.perf_counter()
+        df.write.mode("overwrite").format("noop").save()
+        dt = time.perf_counter() - t0
+        best = dt if best is None else min(best, dt)
+    return round(cbest, 3), round(best, 3)
+
+
 def cpu_calibration() -> float:
     """Fixed single-thread workload (sha256 over 32 MB), min of 3 — a
     box-speed yardstick. This container shows run-to-run host CPU-steal
@@ -522,18 +580,7 @@ def main() -> None:
             print(f"layout prepare failed ({exc}); benching raw layout", file=sys.stderr)
             bench_dir, prep_sec = sf_dir, 0.0
 
-    # page-cache warm: when the relayout is REUSED (prepare cost 0), its
-    # files may be cold on disk, unlike the round that wrote them — which
-    # skews the first-listed queries (observed round 3: layout_prepare_sec
-    # 0.0 and the early queries 2x their round-2 times). Touch every table
-    # once so all rounds bench against a warm cache.
-    from api_etl_pipeline_spark.tables import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, bench_dir, t).write.mode("overwrite").format("noop").save()
-
-    # warmup: run the flagship once to pay session/codegen startup
-    specs[HEADLINE[0]].fn(spark, bench_dir).write.mode("overwrite").format("noop").save()
+    warm(spark, bench_dir)
 
     # several executions per query, report the min: the first pays one-time
     # plan/codegen/file-listing costs that a steady-state engine amortizes;
@@ -562,56 +609,19 @@ def main() -> None:
         "dd10_keep_best_dedup",
         "samp06_cluster_safe_split",
     }
-    constructions: dict[str, float] = {}
-
-    # r14 (optimization round 1): a construction that performs NO
-    # checkpoint builds a PURE plan — nothing is materialized at
-    # construction time, so re-running fn() per timing run only repeats
-    # identical py4j/Catalyst work while every noop execution computes
-    # from the parquet scans regardless of which handle it runs on.
-    # Such constructions run TWICE (construction_sec keeps its min-of-
-    # constructions-that-ran semantics on a warm sample) and the handle
-    # is reused for the remaining runs — detected by the checkpoint
-    # counter, not an allowlist. Queries that checkpoint keep the
-    # fresh-construction-per-run discipline: reusing their handle would
-    # let runs 2..n read run 1's materialized blocks inside the timed
-    # region. The timed noop region is untouched either way; every run
-    # still computes from the parquet scans.
-    from api_etl_pipeline_spark import checkpoint as _ckpt
-
-    _PURE_CONSTRUCTIONS = 2
-
-    def time_one(name: str) -> float:
-        best = None
-        cbest = None
-        cached = None
-        pure_builds = 0
-        for _ in range(runs):
-            if cached is None:
-                seq0 = _ckpt.CHECKPOINT_SEQ
-                c0 = time.perf_counter()
-                df = specs[name].fn(spark, bench_dir)
-                c1 = time.perf_counter()
-                cbest = (c1 - c0) if cbest is None else min(cbest, c1 - c0)
-                if _ckpt.CHECKPOINT_SEQ == seq0:
-                    pure_builds += 1
-                    if pure_builds >= _PURE_CONSTRUCTIONS:
-                        cached = df
-            else:
-                df = cached
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        constructions[name] = round(cbest, 3)
-        return round(best, 3)
-
-    timings: dict[str, float] = {name: time_one(name) for name in names}
+    measured = {n: measure(spark, specs[n].fn, bench_dir, runs) for n in names}
 
     # round-11: rotating micro-exempt sample — timed, recorded separately
     # from the headline so `value` stays round-over-round comparable
-    rotation = rotation_sample(list(specs), set(timings))
-    timings_rotation = {name: time_one(name) for name in rotation}
+    rotation = rotation_sample(list(specs), set(measured))
+    measured_rotation = {
+        n: measure(spark, specs[n].fn, bench_dir, runs) for n in rotation
+    }
+    timings = {n: e for n, (_, e) in measured.items()}
+    timings_rotation = {n: e for n, (_, e) in measured_rotation.items()}
+    constructions = {
+        n: c for n, (c, _) in (measured | measured_rotation).items()
+    }
 
     calib = cpu_calibration()
     calib_par = cpu_calibration_parallel(cpus)
@@ -725,15 +735,12 @@ def main() -> None:
     # copy of BENCH_QUERIES.json closes the r14 hole where the driver's
     # 8-core scaling run overwrote the 32-core run's per-query file.
     queries_file = Path(_REPO) / "BENCH_QUERIES.json"
-    try:
-        queries_file.write_text(json.dumps(full, indent=1) + "\n")
-    except OSError as exc:
-        print(f"could not write {queries_file}: {exc}", file=sys.stderr)
     queries_file_cpu = Path(_REPO) / f"BENCH_QUERIES_c{cpus}.json"
-    try:
-        queries_file_cpu.write_text(json.dumps(full, indent=1) + "\n")
-    except OSError as exc:
-        print(f"could not write {queries_file_cpu}: {exc}", file=sys.stderr)
+    for f in (queries_file, queries_file_cpu):
+        try:
+            f.write_text(json.dumps(full, indent=1) + "\n")
+        except OSError as exc:
+            print(f"could not write {f}: {exc}", file=sys.stderr)
     print(json.dumps(full))
 
     def emit_parts(part_key: str, inner_key: str, items: dict, limit: int = 390):

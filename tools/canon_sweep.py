@@ -10,7 +10,7 @@ representation divergence (Decimal vs float64, datetime.date vs
 datetime64, NaN spelling, bool casing) fails here even when the value
 mirror passes.
 
-    python tools/canon_sweep.py [first_n]    # default: all registered
+    python tools/canon_sweep.py [NAME ...]    # default: all registered
 
 Exit code = number of failing queries.
 """
@@ -52,13 +52,11 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
     qs = all_queries()
-    names = list(qs)
-    if len(sys.argv) > 1:
-        names = names[: int(sys.argv[1])]
+    names = sys.argv[1:] or list(qs)
     bad = 0
     for name in names:
-        spec = qs[name]
         try:
+            spec = qs[name]
             sdf = spec.fn(spark, SF_DIR).toPandas()
             ddf = con.execute(spec.oracle).df()
             if len(sdf) != len(ddf) or canon_hash(sdf) != canon_hash(ddf):
