@@ -12,9 +12,9 @@ CLUSTER-SCALE CAVEAT (stated once here, inherited by every call site):
 `localCheckpoint` stores blocks on executors and is NOT fault-tolerant —
 an executor loss invalidates the checkpoint and fails the query. On a
 real cluster, set a reliable checkpoint directory
-(`spark.sparkContext.setCheckpointDir("hdfs://…")`) and flip
-RELIABLE=True (or export SPARK_GRAFT_RELIABLE_CHECKPOINT=1) so these
-sites use `DataFrame.checkpoint` instead; local[...] test runs keep the
+(`spark.sparkContext.setCheckpointDir("hdfs://…")`) and export
+SPARK_GRAFT_RELIABLE_CHECKPOINT=1 (read on every call) so these sites
+use `DataFrame.checkpoint` instead; local[...] test runs keep the
 executor-local fast path, where driver==executor makes the caveat moot.
 """
 
@@ -39,10 +39,6 @@ def reliable_enabled() -> bool:
         "no",
     )
 
-
-# import-time snapshot, kept for introspection/back-compat; the
-# checkpoint functions consult reliable_enabled() live
-RELIABLE = reliable_enabled()
 
 # Pre-checkpoint observer (round-5 advice): checkpointing REPLACES the
 # plan with an RDD scan, so anything the linter would have flagged in an

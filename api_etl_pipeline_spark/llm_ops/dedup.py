@@ -1224,8 +1224,8 @@ def dd14_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # dd16 — LSH recall/precision audit. sim11 audits the ANN index against
-# brute-force ground truth; the dedup family's LSH banding (dd03/dd04)
-# had no equivalent: banding is a RECALL device (P[candidate] =
+# brute-force ground truth; this is the dedup family's equivalent for
+# the LSH banding (dd03/dd04): banding is a RECALL device (P[candidate] =
 # 1-(1-J^r)^b), and an un-audited index silently under-recalls when its
 # band/row geometry drifts from the corpus's similarity profile. The
 # synthetic corpus has no true near-dup pairs to audit against, so a
@@ -1235,18 +1235,19 @@ def dd14_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Ground truth = exact 3-gram-shingle Jaccard on ALL stratum pairs
 # (the SAME feature set the MinHash signatures summarize, so the audit
 # measures the INDEX, not a feature mismatch); threshold is the
-# integer-rearranged inter*5 >= union (J >= 0.2).
+# integer-rearranged inter*5 >= union (J >= 0.2). dd17 (band geometries)
+# and dd25 (simhash Hamming thresholds) score other candidate
+# generators against the same pairs and the same confusion matrix.
 DD16_STRATUM = 60  # stratum docs; derived corpus = 2x, pairs = C(120,2)
 DD16_DROP_EVERY = 5  # mutant drops every 5th token
-# dd16/dd17's missed_pair_checksum encodes a pair as da*10000 + db, and
-# derived ids run to 2*DD16_STRATUM - 1; the multiplier must dominate the
-# id range or the encoding collides and the checksum goes silently
-# ambiguous (round-9 advice). Guard the constant coupling here, next to
-# the knob someone would actually turn.
+# missed_pair_checksum encodes a pair as da*10000 + db over derived ids
+# < 2*DD16_STRATUM; the multiplier must dominate the id range or the
+# encoding collides and the checksum goes silently ambiguous.
 assert 2 * DD16_STRATUM <= 10_000, "dd16 checksum multiplier would collide"
 
-# the derived-stratum CTE fragment (stratum → derived → sh) shared by
-# dd16 and dd17's oracles so the audit population cannot drift
+# DuckDB fragments shared by the dd16/dd17/dd25 oracles, so the audit
+# population, its ground truth and the confusion matrix cannot drift
+# between them: the derived-stratum CTEs (stratum → derived → sh) ...
 _DUCK_DD16_DERIVED = f"""stratum AS (
         SELECT doc_id, text FROM documents WHERE doc_id < {DD16_STRATUM}
     ),
@@ -1267,19 +1268,46 @@ _DUCK_DD16_DERIVED = f"""stratum AS (
         FROM (SELECT doc_id, string_split(text, ' ') AS t FROM derived)
         WHERE len(t) >= 3
     )"""
+# ... the ground-truth pair relation (twin of _dd16_pairs) ...
+_DUCK_DD16_PAIRS = """pairs AS (
+        SELECT da, db, inter, un, inter * 5 >= un AS is_dup
+        FROM (
+            SELECT a.doc_id AS da, b.doc_id AS db,
+                   len(list_intersect(a.sh, b.sh))::BIGINT AS inter,
+                   (len(a.sh) + len(b.sh)
+                    - len(list_intersect(a.sh, b.sh)))::BIGINT AS un
+            FROM sh a JOIN sh b ON b.doc_id > a.doc_id
+        )
+    )"""
+# ... and the confusion-matrix select list over (da, db, is_dup,
+# is_cand) rows (twin of _dd16_confusion)
+_DUCK_DD16_CONFUSION = """COUNT(CASE WHEN is_dup THEN 1 END)::BIGINT AS n_true_dups,
+           COUNT(CASE WHEN is_cand THEN 1 END)::BIGINT AS n_candidates,
+           COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)::BIGINT
+               AS n_true_positives,
+           COUNT(CASE WHEN is_dup AND NOT is_cand THEN 1 END)::BIGINT
+               AS n_false_negatives,
+           COUNT(CASE WHEN is_cand AND NOT is_dup THEN 1 END)::BIGINT
+               AS n_false_positives,
+           CASE WHEN COUNT(CASE WHEN is_dup THEN 1 END) > 0
+                THEN ROUND(COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)
+                           / COUNT(CASE WHEN is_dup THEN 1 END)::DOUBLE, 6)
+                ELSE 0.0 END AS recall,
+           CASE WHEN COUNT(CASE WHEN is_cand THEN 1 END) > 0
+                THEN ROUND(COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)
+                           / COUNT(CASE WHEN is_cand THEN 1 END)::DOUBLE, 6)
+                ELSE 0.0 END AS precision,
+           COALESCE(SUM(CASE WHEN is_dup AND NOT is_cand
+                             THEN da * 10000 + db END), 0)::BIGINT
+               AS missed_pair_checksum"""
 
 
 def _dd16_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dd16/dd17/dd25 derived audit corpus — fixed stratum, one orig
-    + one every-5th-token-dropped mutant per doc, checkpointed once.
-
-    Memoized per (session, sf_dir) since r14: the audit fixture is a
-    FIXED-size derived relation consumed by three registered audits
-    (dd16/dd17/dd25), each of which re-materialized the identical
-    checkpoint at every construction (bench: 5 constructions x 3
-    queries). One-time wall lands in construction_shared_sec; the
-    audits' TIMED regions (lattice, candidate joins, scoring) are
-    unchanged — they read the checkpoint either way."""
+    + one every-5th-token-dropped mutant per doc. A fixed-size relation
+    shared by three audits, so it is checkpointed eagerly once per
+    (session, sf_dir): its wall lands in construction_shared_sec and the
+    audits' timed regions read the checkpoint."""
 
     def _build() -> DataFrame:
         d = (
@@ -1298,9 +1326,6 @@ def _dd16_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             " ",
         )
-        # eager inside the memoized builder (r15): the materialization
-        # wall lands in construction_shared_sec instead of vanishing
-        # into the first consumer's discarded first timed run
         return eager_checkpoint(
             d.select(
                 F.explode(
@@ -1332,23 +1357,98 @@ def _dd16_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The checkpointed full-width (N_MINHASH) signature relation over
     the derived audit corpus — byte-identical input to dd16's banding
     and dd17's geometry sweep; memoized per (session, sf_dir) like the
-    corpus itself (the signature pass is the 16-md5s-per-shingle cost
-    both audits re-paid per construction)."""
+    corpus itself."""
     from api_etl_pipeline_spark._memo import session_memo
 
+    # built outside the memo builder so its wall is not counted twice
+    derived = _dd16_derived(spark, sf_dir)
     return session_memo(
         spark,
         ("dd16_sig", sf_dir, N_MINHASH),
-        # eager: meter the signature materialization in the shared wall
-        lambda: eager_checkpoint(_signatures_of(_dd16_derived(spark, sf_dir))),
+        lambda: eager_checkpoint(_signatures_of(derived)),
         wall_label=f"dd16_sig[{os.path.basename(str(sf_dir).rstrip('/'))}]",
     )
+
+
+def _dd16_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every derived-stratum pair (da < db) with its exact shingle-set
+    intersection `inter`, union `un` and ground truth `is_dup`
+    (J >= 0.2 as the integer test inter*5 >= un). The pair lattice is an
+    id-sequence explode over the dense derived ids, so every join is an
+    equi-join, never a cartesian, and the relation is C(2·DD16_STRATUM,
+    2) rows at any corpus size."""
+    n_derived = 2 * DD16_STRATUM
+    derived = _dd16_derived(spark, sf_dir)
+    dtoks = derived.select("doc_id", F.split("text", " ").alias("toks"))
+    sh = dtoks.select(
+        "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("sh")
+    )
+    lattice = (
+        derived.select(F.col("doc_id").alias("da"))
+        .filter(F.col("da") < n_derived - 1)
+        .select(
+            "da",
+            F.explode(
+                F.sequence(F.col("da") + 1, F.lit(n_derived - 1))
+            ).alias("db"),
+        )
+        .filter(F.col("db") > F.col("da"))
+    )
+    sha = sh.select(F.col("doc_id").alias("da"), F.col("sh").alias("sha"))
+    shb = sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("shb"))
+    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb"))).cast("bigint")
+    return (
+        lattice.join(sha, "da")
+        .join(shb, "db")
+        .select(
+            "da",
+            "db",
+            inter.alias("inter"),
+            (F.size("sha") + F.size("shb")).cast("bigint").alias("szsum"),
+        )
+        .select(
+            "da", "db", "inter", (F.col("szsum") - F.col("inter")).alias("un")
+        )
+        .withColumn("is_dup", F.col("inter") * 5 >= F.col("un"))
+    )
+
+
+def _dd16_confusion() -> list[Column]:
+    """The confusion-matrix aggregate over (da, db, is_dup, is_cand)
+    rows, n_true_dups … missed_pair_checksum. Recall and precision are
+    each ONE division of exact bigint counts (never a float SUM), 0.0
+    when the divisor is 0 — ANSI mode raises on a zero divisor, and a
+    stratum with no true duplicate or no candidate is a valid input."""
+    is_dup, is_cand = F.col("is_dup"), F.col("is_cand")
+    tp = F.count(F.when(is_dup & is_cand, 1))
+    n_true = F.count(F.when(is_dup, 1))
+    n_cand = F.count(F.when(is_cand, 1))
+    return [
+        n_true.alias("n_true_dups"),
+        n_cand.alias("n_candidates"),
+        tp.alias("n_true_positives"),
+        F.count(F.when(is_dup & ~is_cand, 1)).alias("n_false_negatives"),
+        F.count(F.when(is_cand & ~is_dup, 1)).alias("n_false_positives"),
+        F.when(n_true > 0, F.round(tp / n_true, 6))
+        .otherwise(F.lit(0.0))
+        .alias("recall"),
+        F.when(n_cand > 0, F.round(tp / n_cand, 6))
+        .otherwise(F.lit(0.0))
+        .alias("precision"),
+        F.coalesce(
+            F.sum(F.when(is_dup & ~is_cand, F.col("da") * 10000 + F.col("db"))),
+            F.lit(0),
+        )
+        .cast("bigint")
+        .alias("missed_pair_checksum"),
+    ]
 
 
 @query(
     "dd16_lsh_recall_audit",
     oracle=f"""
     WITH {_DUCK_DD16_DERIVED},
+    {_DUCK_DD16_PAIRS},
     sig AS ({{SIG}}),
     bands AS ({{BANDS}}),
     cand AS (
@@ -1357,18 +1457,10 @@ def _dd16_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
           ON a.band = b.band AND a.bucket = b.bucket
         WHERE a.doc_id < b.doc_id
     ),
-    pairs AS (
-        SELECT a.doc_id AS da, b.doc_id AS db,
-               len(list_intersect(a.sh, b.sh))::BIGINT AS inter,
-               (len(a.sh) + len(b.sh)
-                - len(list_intersect(a.sh, b.sh)))::BIGINT AS un
-        FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-    ),
     scored AS (
         SELECT p.*,
                ({" + ".join(f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)" for i in range(N_MINHASH))})::BIGINT
                    AS agree,
-               p.inter * 5 >= p.un AS is_dup,
                c.da IS NOT NULL AS is_cand
         FROM pairs p
         JOIN sig sa ON sa.doc_id = p.da
@@ -1377,25 +1469,9 @@ def _dd16_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT (SELECT COUNT(*) FROM derived)::BIGINT AS n_docs,
            COUNT(*)::BIGINT AS n_pairs,
-           COUNT(CASE WHEN is_dup THEN 1 END)::BIGINT AS n_true_dups,
-           COUNT(CASE WHEN is_cand THEN 1 END)::BIGINT AS n_candidates,
-           COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)::BIGINT
-               AS n_true_positives,
-           COUNT(CASE WHEN is_dup AND NOT is_cand THEN 1 END)::BIGINT
-               AS n_false_negatives,
-           COUNT(CASE WHEN is_cand AND NOT is_dup THEN 1 END)::BIGINT
-               AS n_false_positives,
-           ROUND(COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)
-                 / COUNT(CASE WHEN is_dup THEN 1 END)::DOUBLE, 6) AS recall,
-           CASE WHEN COUNT(CASE WHEN is_cand THEN 1 END) > 0
-                THEN ROUND(COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)
-                           / COUNT(CASE WHEN is_cand THEN 1 END)::DOUBLE, 6)
-                ELSE 0.0 END AS precision,
+           {_DUCK_DD16_CONFUSION},
            SUM(ABS(agree * un - {N_MINHASH} * inter))::BIGINT AS est_err_num,
-           ({N_MINHASH} * SUM(un))::BIGINT AS est_err_den,
-           COALESCE(SUM(CASE WHEN is_dup AND NOT is_cand
-                             THEN da * 10000 + db END), 0)::BIGINT
-               AS missed_pair_checksum
+           ({N_MINHASH} * SUM(un))::BIGINT AS est_err_den
     FROM scored
     """.replace("{SIG}", _duck_sig_from("derived")).replace(
         "{BANDS}", _duck_bands_from("sig")
@@ -1404,37 +1480,25 @@ def _dd16_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dd16_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall/precision audit of the dd04 LSH banding against exact
     shingle-Jaccard ground truth on a bounded derived stratum — the
-    dedup family's sim11. Emits one row: pair population, true-dup /
-    candidate / TP-FN-FP counts, recall and precision (each ONE IEEE
-    division of exact bigints — never a float SUM), the MinHash
+    dedup family's sim11. Emits one row: derived-corpus size, pair
+    population, the confusion matrix (_dd16_confusion), the MinHash
     estimation error as an exact integer fraction (Σ|agree·union −
-    4·inter| over 4·Σunion — the driver hash pins the estimator's
-    calibration without summing floats), and a checksum of the exact
-    MISSED pairs (which false negatives, not just how many).
-
-    Measured geometry (sf0.01): the every-5th-token mutant lands at
-    J ≈ 0.2-0.45 on 3-gram shingles. The r12-shipped b2r2/4-hash
-    geometry measured 11/60 = 0.18 recall at 0.92 precision by this
-    instrument — the under-recall a tiny banding geometry buys,
-    quantified — and the round-13 production flip to b32r2/64 hashes
-    MEASURES 58/60 = 0.967 recall at 0.906 precision on the same
-    ground truth (the full ladder, including the 0.767 b16r2
-    intermediate, is dd17's sweep). This is the audit's whole point:
-    it is the standing instrument that proves whether a geometry
-    change actually bought the recall it promised.
+    N_MINHASH·inter| over N_MINHASH·Σunion — the result hash pins the
+    estimator's calibration without summing floats), and a checksum of
+    the exact MISSED pairs (which false negatives, not just how many).
+    It is the standing instrument that proves whether a geometry change
+    bought the recall it promised; dd17 measures the geometry ladder.
 
     Plan shape: the derived corpus and its signatures are bounded
     (2·DD16_STRATUM rows) and checkpointed once; ALL joins are
-    equi-joins or the dd04 bucket self-join — the all-pairs lattice is
-    an id-sequence explode (dense derived ids), never a cartesian. At
-    production scale the stratum stays FIXED-size while the index
-    grows, so the audit is O(stratum²) regardless of corpus size —
-    run it per ingest batch as a canary."""
-    n_derived = 2 * DD16_STRATUM
-    derived = _dd16_derived(spark, sf_dir)
-    dtoks = derived.select("doc_id", F.split("text", " ").alias("toks"))
-    sh = dtoks.select(
-        "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("sh")
+    equi-joins or the dd04 bucket self-join. At production scale the
+    stratum stays FIXED-size while the index grows, so the audit is
+    O(stratum²) regardless of corpus size — run it per ingest batch as
+    a canary."""
+    from api_etl_pipeline_spark._memo import session_memo
+
+    n_docs = session_memo(
+        spark, ("dd16_n_docs", sf_dir), _dd16_derived(spark, sf_dir).count
     )
     sig = _dd16_sig(spark, sf_dir)
     bands = _lsh_bands(sig)
@@ -1450,29 +1514,14 @@ def dd16_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("c", F.lit(1))
     )
-    lattice = (
-        derived.select(F.col("doc_id").alias("da"))
-        .filter(F.col("da") < n_derived - 1)
-        .select(
-            "da",
-            F.explode(
-                F.sequence(F.col("da") + 1, F.lit(n_derived - 1))
-            ).alias("db"),
-        )
-        .filter(F.col("db") > F.col("da"))
-    )
-    sha = sh.select(F.col("doc_id").alias("da"), F.col("sh").alias("sha"))
-    shb = sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("shb"))
-    # one-parse column lists / agreement sum (r14, the _fastlit device):
-    # the per-Column forms cost ~1,000 py4j round trips per construction;
-    # these emit the identical integer expressions in 3 parses
+    # one parse per column list / agreement sum: the per-Column forms
+    # cost ~1,000 py4j round trips per construction
     siga = sig.selectExpr(
         "doc_id as da", *[f"mh{i} as a{i}" for i in range(N_MINHASH)]
     )
     sigb = sig.selectExpr(
         "doc_id as db", *[f"mh{i} as b{i}" for i in range(N_MINHASH)]
     )
-    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb"))).cast("bigint")
     agree = F.expr(
         "cast(0 + "
         + " + ".join(
@@ -1482,82 +1531,46 @@ def dd16_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         + " as bigint)"
     )
     scored = (
-        lattice.join(sha, "da")
-        .join(shb, "db")
+        _dd16_pairs(spark, sf_dir)
         .join(siga, "da")
         .join(sigb, "db")
         .join(cand, ["da", "db"], "left")
         .select(
             "da",
             "db",
-            inter.alias("inter"),
-            (F.size("sha") + F.size("shb")).cast("bigint").alias("szsum"),
+            "inter",
+            "un",
+            "is_dup",
             agree.alias("agree"),
             F.col("c").isNotNull().alias("is_cand"),
         )
-        .select(
-            "da",
-            "db",
-            "inter",
-            (F.col("szsum") - F.col("inter")).alias("un"),
-            "agree",
-            "is_cand",
-        )
-        .withColumn("is_dup", F.col("inter") * 5 >= F.col("un"))
     )
-    tp = F.count(F.when(F.col("is_dup") & F.col("is_cand"), 1))
-    n_true = F.count(F.when(F.col("is_dup"), 1))
-    n_cand = F.count(F.when(F.col("is_cand"), 1))
+    *counts, checksum = _dd16_confusion()
     return scored.agg(
-        F.lit(n_derived).cast("bigint").alias("n_docs"),
+        F.lit(n_docs).cast("bigint").alias("n_docs"),
         F.count("*").alias("n_pairs"),
-        n_true.alias("n_true_dups"),
-        n_cand.alias("n_candidates"),
-        tp.alias("n_true_positives"),
-        F.count(F.when(F.col("is_dup") & ~F.col("is_cand"), 1)).alias(
-            "n_false_negatives"
-        ),
-        F.count(F.when(F.col("is_cand") & ~F.col("is_dup"), 1)).alias(
-            "n_false_positives"
-        ),
-        F.round(tp / n_true, 6).alias("recall"),
-        F.when(n_cand > 0, F.round(tp / n_cand, 6))
-        .otherwise(F.lit(0.0))
-        .alias("precision"),
+        *counts,
         F.sum(F.abs(F.col("agree") * F.col("un") - N_MINHASH * F.col("inter")))
         .cast("bigint")
         .alias("est_err_num"),
         (N_MINHASH * F.sum("un")).cast("bigint").alias("est_err_den"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("is_dup") & ~F.col("is_cand"),
-                    F.col("da") * 10000 + F.col("db"),
-                )
-            ),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("missed_pair_checksum"),
+        checksum,
     )
 
 
-# dd17 — LSH band-geometry sweep, measured by dd16's instrument. The
-# r12-retired b2r2/4-hash default measured ~0.18 recall on J≈0.4 pairs;
-# this query MEASURES the geometry ladder instead of asserting the
-# band-math formula: the same derived stratum and the same exact-Jaccard
-# ground truth score six geometries side by side — the retired b2r2
-# contrast (4 hashes), b4r2 / b2r4 (8 hashes: more-bands vs longer-bands
-# directions), b8r4 (32 hashes in 8 long bands: the high-threshold
-# shape, τ ≈ (1/8)^(1/4) ≈ 0.59 — precision at the cost of recall at
-# the audit's J band), b16r2 (the half-width intermediate), and b32r2 —
-# the PRODUCTION geometry, whose buckets are byte-identical to
-# dd04/dd16's. Every geometry takes contiguous hash slices (band i =
-# hashes [i*r, (i+1)*r)), so shorter geometries' band sets are prefixes
-# of longer same-r ones and the superset relations (b2r2 ⊂ b4r2 ⊂ b16r2
-# ⊂ b32r2 candidates; b2r4 ⊂ b8r4) are provable, not sampled. All 64
-# hashes come from the one signature builder (_signatures_of) — 16
-# salted md5s in the SAME shingle explode.
+# dd17 — LSH band-geometry sweep, measured by dd16's instrument: the
+# same derived stratum and the same exact-Jaccard ground truth score six
+# geometries side by side — the retired b2r2 contrast (4 hashes), b4r2 /
+# b2r4 (8 hashes: more-bands vs longer-bands directions), b8r4 (32
+# hashes in 8 long bands: the high-threshold shape, τ ≈ (1/8)^(1/4) ≈
+# 0.59 — precision at the cost of recall at the audit's J band), b16r2
+# (the half-width intermediate), and b32r2 — the PRODUCTION geometry,
+# whose buckets are byte-identical to dd04/dd16's. Every geometry takes
+# contiguous hash slices (band i = hashes [i*r, (i+1)*r)), so shorter
+# geometries' band sets are prefixes of longer same-r ones and the
+# superset relations (b2r2 ⊂ b4r2 ⊂ b16r2 ⊂ b32r2 candidates; b2r4 ⊂
+# b8r4) are provable, not sampled. All 64 hashes come from the one
+# signature builder (_signatures_of).
 DD17_GEOMETRIES = (
     ("b2r2", 2, 2, 4),
     ("b4r2", 4, 2, 8),
@@ -1588,6 +1601,7 @@ def _dd17_duck_bands(sig: str) -> str:
     "dd17_lsh_geometry_sweep",
     oracle=f"""
     WITH {_DUCK_DD16_DERIVED},
+    {_DUCK_DD16_PAIRS},
     sig_full AS ({_duck_sig_from("derived")}),
     bands AS (
         {_dd17_duck_bands("sig_full")}
@@ -1598,13 +1612,6 @@ def _dd17_duck_bands(sig: str) -> str:
           ON a.g = b.g AND a.band = b.band AND a.bucket = b.bucket
         WHERE a.doc_id < b.doc_id
     ),
-    pairs AS (
-        SELECT a.doc_id AS da, b.doc_id AS db,
-               len(list_intersect(a.sh, b.sh))::BIGINT AS inter,
-               (len(a.sh) + len(b.sh)
-                - len(list_intersect(a.sh, b.sh)))::BIGINT AS un
-        FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-    ),
     geoms AS (
         SELECT * FROM (VALUES {", ".join(f"('{g}', {b}, {r}, {h})" for g, b, r, h in DD17_GEOMETRIES)})
             v(geometry, n_bands, n_rows, n_hashes)
@@ -1612,29 +1619,13 @@ def _dd17_duck_bands(sig: str) -> str:
     scored AS (
         SELECT geometry, n_bands::BIGINT AS n_bands, n_rows::BIGINT AS n_rows,
                n_hashes::BIGINT AS n_hashes,
-               p.da, p.db, p.inter * 5 >= p.un AS is_dup,
+               p.da, p.db, p.is_dup,
                c.da IS NOT NULL AS is_cand
         FROM pairs p CROSS JOIN geoms
         LEFT JOIN cand c ON c.g = geometry AND c.da = p.da AND c.db = p.db
     )
     SELECT geometry, n_bands, n_rows, n_hashes,
-           COUNT(CASE WHEN is_dup THEN 1 END)::BIGINT AS n_true_dups,
-           COUNT(CASE WHEN is_cand THEN 1 END)::BIGINT AS n_candidates,
-           COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)::BIGINT
-               AS n_true_positives,
-           COUNT(CASE WHEN is_dup AND NOT is_cand THEN 1 END)::BIGINT
-               AS n_false_negatives,
-           COUNT(CASE WHEN is_cand AND NOT is_dup THEN 1 END)::BIGINT
-               AS n_false_positives,
-           ROUND(COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)
-                 / COUNT(CASE WHEN is_dup THEN 1 END)::DOUBLE, 6) AS recall,
-           CASE WHEN COUNT(CASE WHEN is_cand THEN 1 END) > 0
-                THEN ROUND(COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)
-                           / COUNT(CASE WHEN is_cand THEN 1 END)::DOUBLE, 6)
-                ELSE 0.0 END AS precision,
-           COALESCE(SUM(CASE WHEN is_dup AND NOT is_cand
-                             THEN da * 10000 + db END), 0)::BIGINT
-               AS missed_pair_checksum
+           {_DUCK_DD16_CONFUSION}
     FROM scored
     GROUP BY 1, 2, 3, 4
     """,
@@ -1645,29 +1636,19 @@ def dd17_lsh_geometry_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2r2 contrast, the two 8-hash intermediates (b4r2 = more bands →
     recall, b2r4 = longer bands → precision) and the 32-hash
     b8r4/b16r2 ladder steps, each scored against the identical
-    exact-Jaccard ground truth.
-    One row per geometry with the confusion matrix, recall/precision
-    (single bigint divisions), and the missed-pair checksum — the
-    measured trade-off curve the band-math formula only predicts.
+    exact-Jaccard ground truth. One row per geometry with dd16's
+    confusion matrix — the measured trade-off curve the band-math
+    formula only predicts.
 
-    Plan shape: one derived-corpus checkpoint (shared builder with
-    dd16), ONE full-width signature checkpoint (the production builder —
-    16 salted md5s per shingle in the SAME explode pass), a per-geometry
-    bucket self-join keyed on (geometry, band, bucket), and the dd16
-    id-sequence pair lattice crossed with the 6-row geometry literal
-    (broadcast BNLJ). Fixed stratum — corpus-size-independent like
-    dd16."""
-    n_derived = 2 * DD16_STRATUM
-    derived = _dd16_derived(spark, sf_dir)
-    dtoks = derived.select("doc_id", F.split("text", " ").alias("toks"))
-    sh = dtoks.select(
-        "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("sh")
-    )
+    Plan shape: the shared derived-corpus and full-width signature
+    checkpoints, a per-geometry bucket self-join keyed on (geometry,
+    band, bucket), and the dd16 pair lattice crossed with the 6-row
+    geometry literal (broadcast BNLJ). Fixed stratum —
+    corpus-size-independent like dd16."""
     sig_full = _dd16_sig(spark, sf_dir)
-
-    # one SQL parse for the whole per-geometry band lattice (r14): the
+    # one SQL parse for the whole per-geometry band lattice: the
     # per-Column form built ~64 struct/bucket trees through py4j on
-    # every construction (~1.5 s of the wall)
+    # every construction
     band_structs = ", ".join(
         f"struct('{_sql_safe(g)}' as g, {i} as band, "
         f"{_bucket_sql([f'mh{i * r + j}' for j in range(r)])} as bucket)"
@@ -1694,33 +1675,7 @@ def dd17_lsh_geometry_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("c", F.lit(1))
     )
-    lattice = (
-        derived.select(F.col("doc_id").alias("da"))
-        .filter(F.col("da") < n_derived - 1)
-        .select(
-            "da",
-            F.explode(
-                F.sequence(F.col("da") + 1, F.lit(n_derived - 1))
-            ).alias("db"),
-        )
-        .filter(F.col("db") > F.col("da"))
-    )
-    sha = sh.select(F.col("doc_id").alias("da"), F.col("sh").alias("sha"))
-    shb = sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("shb"))
-    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb"))).cast("bigint")
-    pairs = (
-        lattice.join(sha, "da")
-        .join(shb, "db")
-        .select(
-            "da",
-            "db",
-            inter.alias("inter"),
-            (F.size("sha") + F.size("shb")).cast("bigint").alias("szsum"),
-        )
-        .select(
-            "da", "db", "inter", (F.col("szsum") - F.col("inter")).alias("un")
-        )
-    )
+    pairs = _dd16_pairs(spark, sf_dir)
     geoms = spark.createDataFrame(
         list(DD17_GEOMETRIES), "geometry string, n_bands int, n_rows int, n_hashes int"
     ).select(
@@ -1745,50 +1700,20 @@ def dd17_lsh_geometry_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_hashes",
             pairs["da"].alias("da"),
             pairs["db"].alias("db"),
-            (F.col("inter") * 5 >= F.col("un")).alias("is_dup"),
+            "is_dup",
             F.col("c").isNotNull().alias("is_cand"),
         )
     )
-    tp = F.count(F.when(F.col("is_dup") & F.col("is_cand"), 1))
-    n_true = F.count(F.when(F.col("is_dup"), 1))
-    n_cand = F.count(F.when(F.col("is_cand"), 1))
     return scored.groupBy("geometry", "n_bands", "n_rows", "n_hashes").agg(
-        n_true.alias("n_true_dups"),
-        n_cand.alias("n_candidates"),
-        tp.alias("n_true_positives"),
-        F.count(F.when(F.col("is_dup") & ~F.col("is_cand"), 1)).alias(
-            "n_false_negatives"
-        ),
-        F.count(F.when(F.col("is_cand") & ~F.col("is_dup"), 1)).alias(
-            "n_false_positives"
-        ),
-        F.round(tp / n_true, 6).alias("recall"),
-        F.when(n_cand > 0, F.round(tp / n_cand, 6))
-        .otherwise(F.lit(0.0))
-        .alias("precision"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("is_dup") & ~F.col("is_cand"),
-                    F.col("da") * 10000 + F.col("db"),
-                )
-            ),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("missed_pair_checksum"),
+        *_dd16_confusion()
     )
 
 
-# dd25 — simhash-Hamming recall audit (round-14 verdict task 5). dd16
-# audits MinHash-LSH and sim11 audits the ANN index, but the
-# dd06/dd07 simhash path had NO ground-truth recall instrument — its
-# consumers inherited unmeasured recall exactly as dd04's did before
-# r12. Same device as dd16: the fixed derived stratum (orig +
-# every-5th-token mutant), the same exact shingle-Jaccard ground truth
-# (so the two instruments' recall numbers are directly comparable),
-# and a confusion matrix — swept over Hamming thresholds 0..4 the way
-# dd17 sweeps band geometries, because the threshold IS simhash's only
+# dd25 — simhash-Hamming recall audit: the dd06/dd07 simhash path's
+# ground-truth recall instrument, on dd16's derived stratum and exact
+# shingle-Jaccard ground truth (so the two instruments' recall numbers
+# are directly comparable), swept over Hamming thresholds 0..4 the way
+# dd17 sweeps band geometries — the threshold IS simhash's only
 # geometry knob.
 DD25_MAX_HAMMING = 5  # thresholds swept: 0..DD25_MAX_HAMMING-1
 
@@ -1797,46 +1722,24 @@ DD25_MAX_HAMMING = 5  # thresholds swept: 0..DD25_MAX_HAMMING-1
     "dd25_simhash_recall_audit",
     oracle=f"""
     WITH {_DUCK_DD16_DERIVED},
+    {_DUCK_DD16_PAIRS},
     shash AS ({_duck_simhash_from("derived")}),
     thresholds AS (
         SELECT unnest(generate_series(0, {DD25_MAX_HAMMING - 1}))
             AS threshold
     ),
-    pairs AS (
-        SELECT a.doc_id AS da, b.doc_id AS db,
-               len(list_intersect(a.sh, b.sh))::BIGINT AS inter,
-               (len(a.sh) + len(b.sh)
-                - len(list_intersect(a.sh, b.sh)))::BIGINT AS un,
-               bit_count(xor(ha.simhash, hb.simhash))::BIGINT AS hamming
-        FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-        JOIN shash ha ON ha.doc_id = a.doc_id
-        JOIN shash hb ON hb.doc_id = b.doc_id
-    ),
     scored AS (
-        SELECT t.threshold, p.*,
-               p.inter * 5 >= p.un AS is_dup,
-               p.hamming <= t.threshold AS is_cand
-        FROM pairs p CROSS JOIN thresholds t
+        SELECT t.threshold, p.da, p.db, p.is_dup,
+               bit_count(xor(ha.simhash, hb.simhash)) <= t.threshold
+                   AS is_cand
+        FROM pairs p
+        JOIN shash ha ON ha.doc_id = p.da
+        JOIN shash hb ON hb.doc_id = p.db
+        CROSS JOIN thresholds t
     )
     SELECT threshold::BIGINT AS hamming_threshold,
            COUNT(*)::BIGINT AS n_pairs,
-           COUNT(CASE WHEN is_dup THEN 1 END)::BIGINT AS n_true_dups,
-           COUNT(CASE WHEN is_cand THEN 1 END)::BIGINT AS n_candidates,
-           COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)::BIGINT
-               AS n_true_positives,
-           COUNT(CASE WHEN is_dup AND NOT is_cand THEN 1 END)::BIGINT
-               AS n_false_negatives,
-           COUNT(CASE WHEN is_cand AND NOT is_dup THEN 1 END)::BIGINT
-               AS n_false_positives,
-           ROUND(COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)
-                 / COUNT(CASE WHEN is_dup THEN 1 END)::DOUBLE, 6) AS recall,
-           CASE WHEN COUNT(CASE WHEN is_cand THEN 1 END) > 0
-                THEN ROUND(COUNT(CASE WHEN is_dup AND is_cand THEN 1 END)
-                           / COUNT(CASE WHEN is_cand THEN 1 END)::DOUBLE, 6)
-                ELSE 0.0 END AS precision,
-           COALESCE(SUM(CASE WHEN is_dup AND NOT is_cand
-                             THEN da * 10000 + db END), 0)::BIGINT
-               AS missed_pair_checksum
+           {_DUCK_DD16_CONFUSION}
     FROM scored
     GROUP BY 1
     """,
@@ -1844,84 +1747,37 @@ DD25_MAX_HAMMING = 5  # thresholds swept: 0..DD25_MAX_HAMMING-1
 def dd25_simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall/precision audit of the dd06/dd07 simhash-Hamming near-dup
     path against exact shingle-Jaccard ground truth — the dedup
-    family's THIRD measured-recall instrument (dd16 = MinHash-LSH,
-    sim11 = ANN index, dd25 = simhash), closing the last unmeasured
-    candidate generator (r13 verdict task 5). One row per Hamming
-    threshold 0..4 (dd07 ships ≤3): confusion matrix, recall/precision
-    as single bigint divisions, and the dd16 missed-pair checksum so
-    the driver hash pins WHICH pairs each threshold misses, not just
-    how many.
+    family's third measured-recall instrument (dd16 = MinHash-LSH,
+    sim11 = ANN index, dd25 = simhash). One row per Hamming threshold
+    0..4 (dd07 ships ≤3): pair population plus dd16's confusion matrix,
+    whose missed-pair checksum pins WHICH pairs each threshold misses.
+    Ground truth is IDENTICAL to dd16's (same stratum, same
+    inter·5 ≥ union rule), so the two instruments read on one scale.
 
-    Ground truth is IDENTICAL to dd16's (same derived stratum, same
-    inter·5 ≥ union rule, i.e. shingle-Jaccard ≥ 0.2), so the two
-    instruments read on one
-    scale: the b32r2 MinHash geometry measures 0.967 recall where the
-    16-bit simhash at Hamming ≤3 measures what THIS row says — the
-    honest comparison a pipeline needs before picking its candidate
-    generator.
-
-    Plan shape: bounded derived corpus (2·DD16_STRATUM rows), ONE
-    simhash build over it (dd06's exact recipe via the shared
-    parameterized builder — both engines generated from one spec, the
-    dd16 device), the dd16 id-sequence pair lattice, and the 5-row
-    threshold literal crossed in via broadcast BNLJ (the dd17 geometry
-    lattice shape). Fixed stratum — corpus-size-independent like dd16;
+    Plan shape: bounded derived corpus, ONE simhash build over it
+    (dd06's exact recipe via the shared parameterized builder), the
+    dd16 pair lattice, and the 5-row threshold literal crossed in via
+    broadcast BNLJ. Fixed stratum — corpus-size-independent like dd16;
     run per ingest batch as a canary."""
-    n_derived = 2 * DD16_STRATUM
-    derived = _dd16_derived(spark, sf_dir)
-    dtoks = derived.select("doc_id", F.split("text", " ").alias("toks"))
-    sh = dtoks.select(
-        "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("sh")
-    )
     from api_etl_pipeline_spark._memo import session_memo
 
-    # fixed-size audit simhash relation, memoized like the corpus itself
+    derived = _dd16_derived(spark, sf_dir)
     shash = session_memo(
         spark,
         ("dd25_simhash", sf_dir),
-        # eager: meter the simhash materialization in the shared wall
         lambda: eager_checkpoint(_simhash_of(derived)),
         wall_label=f"dd25_simhash[{os.path.basename(str(sf_dir).rstrip('/'))}]",
     )
-    lattice = (
-        derived.select(F.col("doc_id").alias("da"))
-        .filter(F.col("da") < n_derived - 1)
-        .select(
-            "da",
-            F.explode(
-                F.sequence(F.col("da") + 1, F.lit(n_derived - 1))
-            ).alias("db"),
-        )
-        .filter(F.col("db") > F.col("da"))
-    )
-    sha = sh.select(F.col("doc_id").alias("da"), F.col("sh").alias("sha"))
-    shb = sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("shb"))
     ha = shash.select(F.col("doc_id").alias("da"), F.col("simhash").alias("hash_a"))
     hb = shash.select(F.col("doc_id").alias("db"), F.col("simhash").alias("hash_b"))
-    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb"))).cast("bigint")
     hamming = F.bit_count(
         F.col("hash_a").bitwiseXOR(F.col("hash_b"))
     ).cast("bigint")
     pairs = (
-        lattice.join(sha, "da")
-        .join(shb, "db")
+        _dd16_pairs(spark, sf_dir)
         .join(ha, "da")
         .join(hb, "db")
-        .select(
-            "da",
-            "db",
-            inter.alias("inter"),
-            (F.size("sha") + F.size("shb")).cast("bigint").alias("szsum"),
-            hamming.alias("hamming"),
-        )
-        .select(
-            "da",
-            "db",
-            "inter",
-            (F.col("szsum") - F.col("inter")).alias("un"),
-            "hamming",
-        )
-        .withColumn("is_dup", F.col("inter") * 5 >= F.col("un"))
+        .select("da", "db", "is_dup", hamming.alias("hamming"))
     )
     thr = spark.range(DD25_MAX_HAMMING).select(
         F.col("id").cast("bigint").alias("hamming_threshold")
@@ -1929,35 +1785,8 @@ def dd25_simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = pairs.crossJoin(F.broadcast(thr)).withColumn(
         "is_cand", F.col("hamming") <= F.col("hamming_threshold")
     )
-    tp = F.count(F.when(F.col("is_dup") & F.col("is_cand"), 1))
-    n_true = F.count(F.when(F.col("is_dup"), 1))
-    n_cand = F.count(F.when(F.col("is_cand"), 1))
     return scored.groupBy("hamming_threshold").agg(
-        F.count("*").alias("n_pairs"),
-        n_true.alias("n_true_dups"),
-        n_cand.alias("n_candidates"),
-        tp.alias("n_true_positives"),
-        F.count(F.when(F.col("is_dup") & ~F.col("is_cand"), 1)).alias(
-            "n_false_negatives"
-        ),
-        F.count(F.when(F.col("is_cand") & ~F.col("is_dup"), 1)).alias(
-            "n_false_positives"
-        ),
-        F.round(tp / n_true, 6).alias("recall"),
-        F.when(n_cand > 0, F.round(tp / n_cand, 6))
-        .otherwise(F.lit(0.0))
-        .alias("precision"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("is_dup") & ~F.col("is_cand"),
-                    F.col("da") * 10000 + F.col("db"),
-                )
-            ),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("missed_pair_checksum"),
+        F.count("*").alias("n_pairs"), *_dd16_confusion()
     )
 
 

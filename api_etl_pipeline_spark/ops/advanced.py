@@ -670,37 +670,104 @@ HH02_D = 4  # Count-Min depth (hash rows — md5's four disjoint 32-bit slices)
 HH02_PROBE = 20  # audit probe set: exact top-N tokens
 
 
-@query(
-    "hh02_countmin_audit",
-    oracle=f"""
-    WITH bg AS (
-        SELECT tokens[i] || ' ' || tokens[i + 1] AS bigram
-        FROM (SELECT string_split(text, ' ') AS tokens FROM documents),
-             UNNEST(generate_series(1, len(tokens) - 1)) AS u(i)
-        WHERE len(tokens) >= 2
-    ),
-    tc AS (SELECT bigram, COUNT(*)::BIGINT AS cnt FROM bg GROUP BY bigram),
-    th AS (SELECT bigram, cnt, md5(bigram) AS h FROM tc),
+def cm_cells(df: DataFrame, key: str) -> DataFrame:
+    """`df`'s columns plus (r, bucket): one row per Count-Min cell the
+    row's `key` lands in. The HH02_D hash rows are md5's four disjoint
+    32-bit hex slices of the key's string form (the minhash device,
+    `dedup.py:_signatures_of`), each mod HH02_W; conv(..., 16, 10) ≡
+    DuckDB's '0x'||substr (cm_audit_sql), so cells match exactly."""
+    cols = df.columns
+    cell = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(r).alias("r"),
+                    (
+                        F.conv(F.substring("_h", 1 + 8 * r, 8), 16, 10).cast("bigint")
+                        % HH02_W
+                    ).alias("bucket"),
+                )
+                for r in range(HH02_D)
+            ]
+        )
+    )
+    return (
+        df.withColumn("_h", F.md5(F.col(key).cast("string").cast("binary")))
+        .select(*cols, cell.alias("rb"))
+        .select(*cols, "rb.r", "rb.bucket")
+    )
+
+
+def cm_audit(tc: DataFrame, key: str, sketch: DataFrame, n_probe: int) -> DataFrame:
+    """Count-Min audit tail: for the exact top-`n_probe` keys of `tc`
+    (key, cnt) — ties broken by key — the exact count, the CM estimate
+    (min over the key's cells of `sketch`'s (r, bucket, bucket_total))
+    and the collision-driven overestimate. The probe set is top-N'd via
+    the WindowGroupLimit partial device and the d·w sketch cells
+    broadcast into the probe join."""
+    w = Window.orderBy(F.col("cnt").desc(), F.col(key).asc())
+    probe = (
+        tc.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n_probe)
+        .select(key)
+    )
+    return (
+        cm_cells(tc, key)
+        .join(F.broadcast(probe), key, "left_semi")
+        .join(F.broadcast(sketch), ["r", "bucket"])
+        .groupBy(key, "cnt")
+        .agg(F.min("bucket_total").alias("cm_estimate"))
+        .select(
+            key,
+            F.col("cnt").alias("exact_cnt"),
+            "cm_estimate",
+            (F.col("cm_estimate") - F.col("cnt")).cast("bigint").alias("overestimate"),
+        )
+    )
+
+
+def cm_audit_sql(ctes: str, key: str, n_probe: int) -> str:
+    """DuckDB oracle for cm_cells + cm_audit: `ctes` must define
+    tc(key, cnt); the sketch is SUM(cnt) per cell over tc, which equals
+    any per-partition or per-micro-batch build-and-merge (+ commutes)."""
+    return f"""
+    WITH {ctes},
+    th AS (SELECT {key}, cnt, md5({key}::VARCHAR) AS h FROM tc),
     lattice AS (
-        SELECT bigram, cnt, r,
+        SELECT {key}, cnt, r,
                (('0x' || substr(h, 1 + 8 * r, 8))::BIGINT % {HH02_W}) AS bucket
-        FROM th, (SELECT unnest([0, 1, 2, 3]) AS r) rows_
+        FROM th, (SELECT unnest({list(range(HH02_D))}) AS r) rows_
     ),
     sketch AS (
         SELECT r, bucket, SUM(cnt)::BIGINT AS bucket_total
         FROM lattice GROUP BY r, bucket
     ),
     probe AS (
-        SELECT bigram, cnt FROM tc ORDER BY cnt DESC, bigram ASC LIMIT {HH02_PROBE}
+        SELECT {key}, cnt FROM tc ORDER BY cnt DESC, {key} ASC LIMIT {n_probe}
     )
-    SELECT p.bigram, ANY_VALUE(p.cnt) AS exact_cnt,
+    SELECT p.{key}, ANY_VALUE(p.cnt) AS exact_cnt,
            MIN(s.bucket_total) AS cm_estimate,
            (MIN(s.bucket_total) - ANY_VALUE(p.cnt))::BIGINT AS overestimate
     FROM probe p
-    JOIN lattice l ON l.bigram = p.bigram
+    JOIN lattice l ON l.{key} = p.{key}
     JOIN sketch s ON s.r = l.r AND s.bucket = l.bucket
-    GROUP BY p.bigram
-    """,
+    GROUP BY p.{key}
+    """
+
+
+@query(
+    "hh02_countmin_audit",
+    oracle=cm_audit_sql(
+        """bg AS (
+        SELECT tokens[i] || ' ' || tokens[i + 1] AS bigram
+        FROM (SELECT string_split(text, ' ') AS tokens FROM documents),
+             UNNEST(generate_series(1, len(tokens) - 1)) AS u(i)
+        WHERE len(tokens) >= 2
+    ),
+    tc AS (SELECT bigram, COUNT(*)::BIGINT AS cnt FROM bg GROUP BY bigram)""",
+        "bigram",
+        HH02_PROBE,
+    ),
 )
 def hh02_countmin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch accuracy audit (Cormode & Muthukrishnan 2005):
@@ -715,12 +782,7 @@ def hh02_countmin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     heavy-hitter pre-filtering. Companion to hh01 (Space-Saving
     candidates) and q51 (HLL distinct): the third classic mergeable
     sketch, made fully oracle-checkable because every value is an exact
-    integer.
-
-    The d hash rows are md5's four disjoint 32-bit hex slices (the
-    minhash device, `dedup.py:_signatures_of`) — one md5 per DISTINCT
-    bigram, identical on both engines via the '0x'||substr ≡ conv(...,
-    16, 10) equivalence, so sketch cells and estimates match exactly;
+    integer. Cells come from cm_cells (one md5 per DISTINCT bigram);
     bigrams are tx05's positional-transform construction.
 
     Plan shape: ONE corpus-scale stage — the vocab-bounded (bigram,
@@ -729,14 +791,10 @@ def hh02_countmin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (row, bucket) — numerically identical to the per-partition
     build-and-merge a streaming deployment does (+ commutes), which is
     the mergeability property the audit certifies. Everything past the
-    bigram counts is vocab- then constant-bounded: d·w = 256 sketch
-    cells broadcast into the probe join, probe set top-N'd via the
-    WindowGroupLimit partial device. At 100 TB the sketch replaces the
-    exact aggregate precisely where the n-gram domain outgrows the
-    shuffle (hh01's economics); this audit quantifies what that trade
-    costs on the corpus's real skew."""
-    from api_etl_pipeline_spark.checkpoint import lazy_checkpoint
-
+    bigram counts is vocab- then constant-bounded (cm_audit). At 100 TB
+    the sketch replaces the exact aggregate precisely where the n-gram
+    domain outgrows the shuffle (hh01's economics); this audit
+    quantifies what that trade costs on the corpus's real skew."""
     d = load_table(spark, sf_dir, "documents").select(
         F.split("text", " ").alias("toks")
     )
@@ -750,54 +808,19 @@ def hh02_countmin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    tc = (
+    # three consumers (cells->sketch, cells->probe join, probe): without
+    # the lineage cut each would re-run the corpus explode
+    tc = lazy_checkpoint(
         d.select(F.explode(bigrams).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("cnt"))
-        .withColumn("h", F.md5(F.col("bigram").cast("binary")))
     )
-    # three consumers (lattice->sketch, lattice->probe join, probe):
-    # without the lineage cut each would re-run the corpus explode
-    tc = lazy_checkpoint(tc)
-    lat = tc.select(
-        "bigram",
-        "cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        (
-                            F.conv(F.substring("h", 1 + 8 * r, 8), 16, 10).cast(
-                                "bigint"
-                            )
-                            % HH02_W
-                        ).alias("bucket"),
-                    )
-                    for r in range(HH02_D)
-                ]
-            )
-        ).alias("rb"),
-    ).select("bigram", "cnt", F.col("rb.r").alias("r"), F.col("rb.bucket").alias("bucket"))
-    sketch = lat.groupBy("r", "bucket").agg(F.sum("cnt").alias("bucket_total"))
-    w = Window.orderBy(F.col("cnt").desc(), F.col("bigram").asc())
-    probe = (
-        tc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= HH02_PROBE)
-        .select("bigram", "cnt")
+    sketch = (
+        cm_cells(tc, "bigram")
+        .groupBy("r", "bucket")
+        .agg(F.sum("cnt").alias("bucket_total"))
     )
-    return (
-        lat.join(F.broadcast(probe.select("bigram")), "bigram", "left_semi")
-        .join(F.broadcast(sketch), ["r", "bucket"])
-        .groupBy("bigram", "cnt")
-        .agg(F.min("bucket_total").alias("cm_estimate"))
-        .select(
-            "bigram",
-            F.col("cnt").alias("exact_cnt"),
-            "cm_estimate",
-            (F.col("cm_estimate") - F.col("cnt")).cast("bigint").alias("overestimate"),
-        )
-    )
+    return cm_audit(tc, "bigram", sketch, HH02_PROBE)
 
 
 def asof_join_nearest(

@@ -18,50 +18,82 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from api_etl_pipeline_spark.registry import query
+from api_etl_pipeline_spark.ops.advanced import (
+    HH02_D,
+    HH02_W,
+    cm_audit,
+    cm_audit_sql,
+    cm_cells,
+)
 from api_etl_pipeline_spark.ops.events_analytics import EV19_ORACLE as _EV19_ORACLE
 from api_etl_pipeline_spark.tables import load_table
 
-# per-(process, sf_dir) staging cache for the live-stream twins: the
-# file-stream source needs a directory it can list, so events.parquet is
-# copied once per sf_dir, reused across invocations (bench runs a query
-# 5x), and removed at interpreter exit — round-4 advice flagged the
-# previous copy-per-invocation/never-delete pattern as a disk leak
-_STAGE_CACHE: dict[str, str] = {}
+# per-(process, sf_dir, table) staging cache for the live-stream twins:
+# the file-stream source needs a directory it can list, so the table is
+# copied once per (sf_dir, table), reused across invocations (bench runs
+# a query 5x), and removed at interpreter exit
+_STAGE_CACHE: dict[tuple[str, str], str] = {}
 
 
-def _stage_events_dir(sf_dir: str) -> str:
-    """Stage events as EXACTLY ONE file. This is a load-bearing
-    invariant for the live-run oracles (st06/07/09/10): with
-    maxFilesPerTrigger unset, the whole file arrives in a single
+def _stage_dir(sf_dir: str, table: str) -> str:
+    """Stage `table` as EXACTLY ONE file, `{table}.parquet`, so the
+    staged directory also reads as an sf_dir through load_table. The
+    single file is a load-bearing invariant for every live-run oracle:
+    with maxFilesPerTrigger unset, the whole file arrives in a single
     micro-batch, so no row is ever 'late' relative to another batch's
-    watermark — state eviction can never drop a would-be match, and
-    the drained live output must equal the batch query exactly.
-    Multi-file staging would make the join oracles flaky (a match
-    whose partner arrived in an earlier batch, past the advanced
-    watermark, would be dropped from stream-stream join state)."""
+    watermark — state eviction can never drop a would-be join partner
+    or an earlier first occurrence, and the drained live output must
+    equal the batch query exactly. A multi-file source would need a
+    coalesce rewrite first, not a silent multi-copy."""
     import atexit
     import os
     import shutil
     import tempfile
 
-    if sf_dir not in _STAGE_CACHE:
-        stage_dir = tempfile.mkdtemp(prefix="st_live_events_")
+    key = (sf_dir, table)
+    if key not in _STAGE_CACHE:
+        src = f"{sf_dir}/{table}.parquet"
+        # a Spark-written table directory (e.g. the empty-input fixture)
+        # stages its data files, skipping _SUCCESS/.crc metadata
+        files = (
+            [f"{src}/{f}" for f in os.listdir(src) if not f.startswith(("_", "."))]
+            if os.path.isdir(src)
+            else [src]
+        )
+        assert len(files) == 1, f"single-micro-batch invariant broken: {files}"
+        stage_dir = tempfile.mkdtemp(prefix=f"st_live_{table}_")
         atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-        src = f"{sf_dir}/events.parquet"
-        if os.path.isdir(src):
-            # Spark-written table directory (e.g. the empty-input fixture):
-            # stage its data files, skipping _SUCCESS/.crc metadata. The
-            # one-file invariant below still gates — a multi-part source
-            # would need a coalesce rewrite first, not a silent multi-copy.
-            for part in os.listdir(src):
-                if not part.startswith(("_", ".")):
-                    shutil.copy(f"{src}/{part}", f"{stage_dir}/{part}")
-        else:
-            shutil.copy(src, f"{stage_dir}/events.parquet")
-        staged = os.listdir(stage_dir)
-        assert len(staged) == 1, f"single-micro-batch invariant broken: {staged}"
-        _STAGE_CACHE[sf_dir] = stage_dir
-    return _STAGE_CACHE[sf_dir]
+        shutil.copy(files[0], f"{stage_dir}/{table}.parquet")
+        _STAGE_CACHE[key] = stage_dir
+    return _STAGE_CACHE[key]
+
+
+def _drain(stream: DataFrame, output_mode: str) -> DataFrame:
+    """Run a live query into a memory sink under a fresh name until its
+    staged source is drained, and return the sink table with every
+    timestamp column cast to timestamp_ntz (zoned values would collect
+    through the process timezone). The query is stopped even when the
+    drain fails, so a failed run leaves no query running."""
+    import uuid
+
+    name = "live_" + uuid.uuid4().hex[:10]
+    q = (
+        stream.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    out = stream.sparkSession.table(name)
+    return out.select(
+        *[
+            F.col(c).cast("timestamp_ntz").alias(c) if t.startswith("timestamp") else c
+            for c, t in out.dtypes
+        ]
+    )
 
 
 @query(
@@ -252,36 +284,17 @@ def st05_watermark_sync_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st06_streaming_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T7 as an ACTUAL Structured Streaming run, now with a FULL oracle
-    (round-5 verdict task 5): stage the events parquet as a file stream,
-    run the watermarked tumbling aggregation (stream_ops.tumbling_counts)
-    in complete output mode to a memory sink, drain it synchronously, and
-    return the materialized result. Because the bounded source drains to
-    completion and complete mode retains every window, the live result
-    must equal the batch twin (st01) exactly — so st01's batch SQL IS
-    this query's oracle, and the driver's hash compare now proves
-    live==batch directly instead of a rows-only check."""
-    import uuid
-
+    """T7 as an ACTUAL Structured Streaming run with a FULL oracle: the
+    staged events file stream runs the watermarked tumbling aggregation
+    (stream_ops.tumbling_counts) in complete output mode and is drained.
+    Because the bounded source drains to completion and complete mode
+    retains every window, live == batch: the result must equal the batch
+    twin (st01) exactly, so st01's SQL is this query's oracle."""
     from api_etl_pipeline_spark.streaming.stream_ops import tumbling_counts
     from api_etl_pipeline_spark.tables import load_events_stream
 
-    stage_dir = _stage_events_dir(sf_dir)
-    stream = load_events_stream(spark, stage_dir)
-    name = "st06_" + uuid.uuid4().hex[:10]
-    q = (
-        tumbling_counts(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    # zoned window_start -> NTZ for timezone-independent collection
-    return spark.table(name).withColumn(
-        "window_start", F.col("window_start").cast("timestamp_ntz")
-    )
+    stream = load_events_stream(spark, _stage_dir(sf_dir, "events"))
+    return _drain(tumbling_counts(stream), "complete")
 
 
 @query(
@@ -302,47 +315,27 @@ def st06_streaming_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st07_streaming_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stream-stream interval join (purchase⋈clicks within the
     preceding hour, watermark-bounded state on both sides) as an ACTUAL
-    two-stream Structured Streaming run into a memory sink — now with a
-    FULL oracle (round-5 verdict task 5). The live==batch guarantee
-    rests on the SINGLE-MICRO-BATCH staging invariant (_stage_events_dir
-    stages exactly one file, asserted there): all rows of both sides
-    arrive in one micro-batch, so watermark state eviction can never
-    drop a late-arriving partner (in general, stream-stream inner joins
-    DO lose matches whose partner is evicted past the watermark — the
-    round-6 ADVICE correction to this docstring). Within that
-    invariant, the bounded source drains to completion under
-    processAllAvailable and the live output must equal the batch
-    interval join row-for-row — the batch SQL is the oracle and the
-    driver's hash compare proves live==batch directly."""
-    import uuid
-
+    two-stream Structured Streaming run with a FULL oracle. live == batch
+    rests on the single-micro-batch staging invariant (_stage_dir): all
+    rows of both sides arrive in one micro-batch, so watermark state
+    eviction can never drop a late-arriving partner (in general,
+    stream-stream inner joins DO lose matches whose partner is evicted
+    past the watermark). Within that invariant the drained output must
+    equal the batch interval join row-for-row, so the batch SQL is the
+    oracle."""
     from api_etl_pipeline_spark.streaming.stream_ops import (
         purchase_click_stream_join,
     )
     from api_etl_pipeline_spark.tables import load_events_stream
 
-    stage_dir = _stage_events_dir(sf_dir)
+    stage_dir = _stage_dir(sf_dir, "events")
     s1 = load_events_stream(spark, stage_dir)
     s2 = load_events_stream(spark, stage_dir)
     joined = purchase_click_stream_join(
         s1.filter(F.col("event_type") == "purchase"),
         s2.filter(F.col("event_type") == "click"),
     )
-    name = "st07_" + uuid.uuid4().hex[:10]
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.table(name)
-    ntz = [
-        F.col(c).cast("timestamp_ntz").alias(c) if t.startswith("timestamp") else F.col(c)
-        for c, t in out.dtypes
-    ]
-    return out.select(*ntz)
+    return _drain(joined, "append")
 
 
 @query(
@@ -363,31 +356,19 @@ def st13_streaming_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the oracle. A missed dedup doubles a row, an over-eager
     one drops a row; either flips the driver's hash.
 
-    Rests on the single-micro-batch staging invariant
-    (_stage_events_dir): one trigger reads both copies, so no copy can
-    arrive after its twin's state was evicted past the watermark.
-    event_id uniqueness in the source makes the oracle exact (verified:
-    COUNT(*) == COUNT(DISTINCT event_id) in the testdata)."""
-    import uuid
-
+    Rests on the single-micro-batch staging invariant (_stage_dir): one
+    trigger reads both copies, so no copy can arrive after its twin's
+    state was evicted past the watermark. event_id uniqueness in the
+    source makes the oracle exact (verified: COUNT(*) ==
+    COUNT(DISTINCT event_id) in the testdata)."""
     from api_etl_pipeline_spark.streaming.stream_ops import dedup_redelivery
     from api_etl_pipeline_spark.tables import load_events_stream
 
-    stage_dir = _stage_events_dir(sf_dir)
+    stage_dir = _stage_dir(sf_dir, "events")
     doubled = load_events_stream(spark, stage_dir).unionByName(
         load_events_stream(spark, stage_dir)
     )
-    name = "st13_" + uuid.uuid4().hex[:10]
-    q = (
-        dedup_redelivery(doubled)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    return _drain(dedup_redelivery(doubled), "append")
 
 
 @query(
@@ -452,23 +433,18 @@ def st08_enriched_segment_windows(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def st09_streaming_enrich_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """st08's dataflow as an ACTUAL Structured Streaming run, now with a
-    FULL oracle (round-5 verdict task 5): the staged events file stream
-    is enriched per micro-batch against the static customer dimension
-    (stream_ops.enrich_with_dimension — broadcast, no join state, no
-    watermark needed on the static side) and aggregated into watermarked
-    1-hour windows per segment into a memory sink in complete output
-    mode. Complete mode over a fully drained bounded source retains
-    every window, so the live result must equal the batch twin (st08)
-    exactly — st08's SQL is the oracle and the driver's hash compare
-    proves live==batch directly."""
-    import uuid
-
+    """st08's dataflow as an ACTUAL Structured Streaming run with a FULL
+    oracle: the staged events file stream is enriched per micro-batch
+    against the static customer dimension (stream_ops.
+    enrich_with_dimension — broadcast, no join state, no watermark
+    needed on the static side) and aggregated into watermarked 1-hour
+    windows per segment in complete output mode. Complete mode over a
+    fully drained bounded source retains every window, so live == batch:
+    the result must equal st08 exactly, and st08's SQL is the oracle."""
     from api_etl_pipeline_spark.streaming.stream_ops import enrich_with_dimension
     from api_etl_pipeline_spark.tables import load_events_stream
 
-    stage_dir = _stage_events_dir(sf_dir)
-    stream = load_events_stream(spark, stage_dir)
+    stream = load_events_stream(spark, _stage_dir(sf_dir, "events"))
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
@@ -488,18 +464,7 @@ def st09_streaming_enrich_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = "st09_" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).withColumn(
-        "window_start", F.col("window_start").cast("timestamp_ntz")
-    )
+    return _drain(agg, "complete")
 
 
 @query(
@@ -575,26 +540,11 @@ def st11_streaming_sliding_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to overlapping-window assignment (each event lands in
     exactly 2 windows; the oracle reproduces that via the two-offset
     union, st02's formulation)."""
-    import uuid
-
     from api_etl_pipeline_spark.streaming.stream_ops import sliding_counts
     from api_etl_pipeline_spark.tables import load_events_stream
 
-    stage_dir = _stage_events_dir(sf_dir)
-    stream = load_events_stream(spark, stage_dir)
-    name = "st11_" + uuid.uuid4().hex[:10]
-    q = (
-        sliding_counts(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).withColumn(
-        "window_start", F.col("window_start").cast("timestamp_ntz")
-    )
+    stream = load_events_stream(spark, _stage_dir(sf_dir, "events"))
+    return _drain(sliding_counts(stream), "complete")
 
 
 @query(
@@ -633,29 +583,11 @@ def st12_streaming_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     (start, end, user, count) tuples once the bounded source drains
     under complete mode. Completes the live trio's coverage of T7:
     tumbling (st06), sliding (st11), session (this)."""
-    import uuid
-
     from api_etl_pipeline_spark.streaming.stream_ops import session_counts
     from api_etl_pipeline_spark.tables import load_events_stream
 
-    stage_dir = _stage_events_dir(sf_dir)
-    stream = load_events_stream(spark, stage_dir)
-    name = "st12_" + uuid.uuid4().hex[:10]
-    q = (
-        session_counts(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.table(name)
-    ntz = [
-        F.col(c).cast("timestamp_ntz").alias(c) if t.startswith("timestamp") else F.col(c)
-        for c, t in out.dtypes
-    ]
-    return out.select(*ntz)
+    stream = load_events_stream(spark, _stage_dir(sf_dir, "events"))
+    return _drain(session_counts(stream), "complete")
 
 _ST14_CUT = "2024-01-15 00:00:00"  # standing-table high-water mark
 _ST14_OVERLAP_H = 48  # SEC overlap re-fetch window (dossier :230)
@@ -712,7 +644,7 @@ def run_streaming_sync(
     )
     base.write.mode("overwrite").parquet(table_dir)
 
-    stage_dir = _stage_events_dir(sf_dir)
+    stage_dir = _stage_dir(sf_dir, "events")
     for _ in range(runs):
         doubled = load_events_stream(spark, stage_dir).unionByName(
             load_events_stream(spark, stage_dir)
@@ -782,7 +714,7 @@ def st15_journey_patterns_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     GroupState carries the journey string; each micro-batch sorts its
     rows by (ts, event_id), appends their chars, and emits the updated
     pattern-metric snapshot. Under the single-file staging invariant
-    (_stage_events_dir: one micro-batch, so no cross-batch event-time
+    (_stage_dir: one micro-batch, so no cross-batch event-time
     reordering can occur) the final snapshot per user equals the batch
     journey exactly; in production the same operator runs behind a
     watermarked sort-within-session stage (st03), the standard
@@ -793,20 +725,16 @@ def st15_journey_patterns_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     State is one BOUNDED-BY-CONSTRUCTION string per user: the journey
     stops growing at EV19_CAP chars and every later event increments
-    the n_overflow state counter instead (ev19's round-10 guard, shared
-    constant + shared oracle, so live==batch includes the cap
-    semantics); output schema is all-BIGINT so no timestamp
+    the n_overflow state counter instead (ev19's cap, shared constant +
+    shared oracle, so live==batch includes the cap semantics); output schema is all-BIGINT so no timestamp
     canonicalization risk. Bench-exempt like every live st-query
     (micro-batch machinery dominates wall; ev19 is the perf twin)."""
-    import uuid
-
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from api_etl_pipeline_spark.ops.events_analytics import EV19_CAP, EV19_TYPE_CHARS
     from api_etl_pipeline_spark.tables import load_events_stream
 
-    stage_dir = _stage_events_dir(sf_dir)
-    stream = load_events_stream(spark, stage_dir).select(
+    stream = load_events_stream(spark, _stage_dir(sf_dir, "events")).select(
         "user_id", "ts", "event_id", "event_type"
     )
     out_schema = (
@@ -824,8 +752,7 @@ def st15_journey_patterns_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pandas as pd
 
         journey, n_overflow = state.get if state.exists else ("", 0)
-        # Accumulate ALL Arrow chunks before sorting (round-10 advice):
-        # a group larger than maxRecordsPerBatch arrives as several
+        # Accumulate ALL Arrow chunks before sorting: a group larger than maxRecordsPerBatch arrives as several
         # chunks whose concatenation is NOT (ts, event_id)-ordered, so a
         # per-chunk sort-and-append could cap the wrong prefix. One sort
         # over the whole micro-batch arrival keeps the cap order-correct
@@ -861,19 +788,10 @@ def st15_journey_patterns_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = "st15_" + uuid.uuid4().hex[:10]
-    q = (
-        snapshots.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
     # memory sink appends every snapshot; the final snapshot per user has
     # the longest journey (journeys only grow), and past the cap the
     # overflow counter keeps growing — so tiebreak on it
-    out = spark.table(name)
+    out = _drain(snapshots, "update")
     w = Window.partitionBy("user_id").orderBy(
         F.col("journey_len").desc(),
         F.col("n_overflow").desc(),
@@ -884,34 +802,6 @@ def st15_journey_patterns_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-_DOC_STAGE_CACHE: dict[str, str] = {}
-
-
-def _stage_documents_dir(sf_dir: str) -> str:
-    """documents twin of _stage_events_dir — same load-bearing
-    SINGLE-FILE invariant: one micro-batch, so the live span-dedup
-    state can never miss a first-occurrence that 'arrived earlier'."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    if sf_dir not in _DOC_STAGE_CACHE:
-        stage_dir = tempfile.mkdtemp(prefix="st_live_docs_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-        src = f"{sf_dir}/documents.parquet"
-        if os.path.isdir(src):
-            for part in os.listdir(src):
-                if not part.startswith(("_", ".")):
-                    shutil.copy(f"{src}/{part}", f"{stage_dir}/{part}")
-        else:
-            shutil.copy(src, f"{stage_dir}/documents.parquet")
-        staged = os.listdir(stage_dir)
-        assert len(staged) == 1, f"single-micro-batch invariant broken: {staged}"
-        _DOC_STAGE_CACHE[sf_dir] = stage_dir
-    return _DOC_STAGE_CACHE[sf_dir]
 
 
 def _dd19_oracle_for_st17() -> str:
@@ -937,7 +827,7 @@ def st17_span_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd19_stats (deterministic projection, the st15 final-selection
     pattern), so live == batch is total.
 
-    Under the single-file staging invariant (_stage_documents_dir: one
+    Under the single-file staging invariant (_stage_dir: one
     micro-batch) every occurrence of a hash reaches its group in one
     trigger, so the sorted-first choice equals dd19's global (doc_id,
     span_idx) window order exactly. In production the same operator
@@ -947,15 +837,13 @@ def st17_span_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     eviction policy is the corpus-retention choice, not a correctness
     knob. Output all-BIGINT; bench-exempt like every live st-query
     (micro-batch machinery dominates wall; dd19 is the perf twin)."""
-    import uuid
-
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from api_etl_pipeline_spark.checkpoint import lazy_checkpoint
     from api_etl_pipeline_spark.llm_ops.dedup import dd19_narrow, dd19_stats
     from pyspark.sql import types as T
 
-    stage_dir = _stage_documents_dir(sf_dir)
+    stage_dir = _stage_dir(sf_dir, "documents")
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -998,17 +886,8 @@ def st17_span_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = "st17_" + uuid.uuid4().hex[:10]
-    q = (
-        snapshots.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
     dropped = (
-        spark.table(name)
+        _drain(snapshots, "update")
         .groupBy("doc_id")
         .agg(
             F.sort_array(F.collect_list(F.col("span_idx").cast("int"))).alias(
@@ -1022,38 +901,18 @@ def st17_span_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd19_stats(narrow, dropped)
 
 
-ST16_W = 64  # Count-Min width, matches hh02's audited geometry
-ST16_D = 4  # depth: md5's four disjoint 32-bit slices
+ST16_W = HH02_W  # Count-Min geometry: hh02's audited width and depth
+ST16_D = HH02_D
 ST16_PROBE = 20
 
 
 @query(
     "st16_countmin_live",
-    oracle=f"""
-    WITH tc AS (
-        SELECT user_id, COUNT(*)::BIGINT AS cnt FROM events GROUP BY user_id
+    oracle=cm_audit_sql(
+        "tc AS (SELECT user_id, COUNT(*)::BIGINT AS cnt FROM events GROUP BY user_id)",
+        "user_id",
+        ST16_PROBE,
     ),
-    th AS (SELECT user_id, cnt, md5(user_id::VARCHAR) AS h FROM tc),
-    lattice AS (
-        SELECT user_id, cnt, r,
-               (('0x' || substr(h, 1 + 8 * r, 8))::BIGINT % {ST16_W}) AS bucket
-        FROM th, (SELECT unnest([0, 1, 2, 3]) AS r) rows_
-    ),
-    sketch AS (
-        SELECT r, bucket, SUM(cnt)::BIGINT AS bucket_total
-        FROM lattice GROUP BY r, bucket
-    ),
-    probe AS (
-        SELECT user_id, cnt FROM tc ORDER BY cnt DESC, user_id ASC LIMIT {ST16_PROBE}
-    )
-    SELECT p.user_id, ANY_VALUE(p.cnt) AS exact_cnt,
-           MIN(s.bucket_total) AS cm_estimate,
-           (MIN(s.bucket_total) - ANY_VALUE(p.cnt))::BIGINT AS overestimate
-    FROM probe p
-    JOIN lattice l ON l.user_id = p.user_id
-    JOIN sketch s ON s.r = l.r AND s.bucket = l.bucket
-    GROUP BY p.user_id
-    """,
 )
 def st16_countmin_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Count-Min maintenance — hh02's sketch kept as LIVE
@@ -1064,110 +923,33 @@ def st16_countmin_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     count in update mode — so streaming state is CONSTANT-size at any
     stream length and any user cardinality; per-key exact counting
     would grow state with |users|, which is exactly the trade the
-    sketch exists to avoid. The memory-sink snapshots drain into the
-    same audit report as hh02: the exact top-{ST16_PROBE} users (batch
-    probe over the same staged data) vs their CM estimates — every
-    value an exact integer, fully oracle-checked against DuckDB running
-    the whole sketch+probe algebra.
+    sketch exists to avoid. The drained sketch feeds hh02's audit tail:
+    the exact top-ST16_PROBE users (batch probe over the same staged
+    file) vs their CM estimates — every value an exact integer, fully
+    oracle-checked against DuckDB running the whole sketch+probe
+    algebra.
 
-    Cell math is hh02's: one md5 per user id string, four disjoint
-    32-bit hex slices as the hash rows ('0x'||substr ≡ conv(...,16,10)
-    cross-engine). Counts only grow across snapshots, so the final cell
-    value is the per-(r, bucket) MAX over the drained memory table —
-    with the single-file staging invariant there is exactly one
-    snapshot per cell. Bench-exempt like every live st-query; hh02 is
-    the sketch family's perf twin."""
-    import uuid
+    Counts only grow across snapshots, so the final cell value is the
+    per-(r, bucket) MAX over the drained memory table — with the
+    single-file staging invariant there is exactly one snapshot per
+    cell. Bench-exempt like every live st-query; hh02 is the sketch
+    family's perf twin."""
+    from api_etl_pipeline_spark.checkpoint import lazy_checkpoint
+    from api_etl_pipeline_spark.tables import load_events_stream
 
-    from api_etl_pipeline_spark.tables import load_events_stream, load_table
-
-    stage_dir = _stage_events_dir(sf_dir)
-    stream = load_events_stream(spark, stage_dir).select(
-        F.col("user_id").cast("string").alias("uid")
-    )
-    lat_stream = stream.select(
-        F.md5(F.col("uid").cast("binary")).alias("h")
-    ).select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        (
-                            F.conv(F.substring("h", 1 + 8 * r, 8), 16, 10).cast(
-                                "bigint"
-                            )
-                            % ST16_W
-                        ).alias("bucket"),
-                    )
-                    for r in range(ST16_D)
-                ]
-            )
-        ).alias("rb")
-    ).select("rb.r", "rb.bucket")
-    cells = lat_stream.groupBy("r", "bucket").count()
-    name = "st16_" + uuid.uuid4().hex[:10]
-    q = (
-        cells.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    stage_dir = _stage_dir(sf_dir, "events")
+    stream = load_events_stream(spark, stage_dir).select("user_id")
+    cells = cm_cells(stream, "user_id").groupBy("r", "bucket").count()
     sketch = (
-        spark.table(name)
+        _drain(cells, "update")
         .groupBy("r", "bucket")
         .agg(F.max("count").alias("bucket_total"))
     )
-    # batch audit side over the SAME staged file the stream consumed;
-    # the user-count aggregate feeds BOTH the probe top-k and the
+    # the user-count aggregate feeds both the probe top-k and the
     # estimate lattice — checkpoint so the staged file scans once
-    # (the hh02 device; the scan audit caught the two-scan form)
-    from api_etl_pipeline_spark.checkpoint import lazy_checkpoint
-
-    ev = load_table(spark, stage_dir, "events")
     tc = lazy_checkpoint(
-        ev.groupBy("user_id").agg(F.count("*").alias("cnt"))
+        load_table(spark, stage_dir, "events")
+        .groupBy("user_id")
+        .agg(F.count("*").alias("cnt"))
     )
-    th = tc.withColumn(
-        "h", F.md5(F.col("user_id").cast("string").cast("binary"))
-    )
-    lat = th.select(
-        "user_id",
-        "cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        (
-                            F.conv(F.substring("h", 1 + 8 * r, 8), 16, 10).cast(
-                                "bigint"
-                            )
-                            % ST16_W
-                        ).alias("bucket"),
-                    )
-                    for r in range(ST16_D)
-                ]
-            )
-        ).alias("rb"),
-    ).select("user_id", "cnt", F.col("rb.r").alias("r"), F.col("rb.bucket").alias("bucket"))
-    w = Window.orderBy(F.col("cnt").desc(), F.col("user_id").asc())
-    probe = (
-        tc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ST16_PROBE)
-        .select("user_id", "cnt")
-    )
-    return (
-        lat.join(F.broadcast(probe.select("user_id")), "user_id", "left_semi")
-        .join(F.broadcast(sketch), ["r", "bucket"])
-        .groupBy("user_id", "cnt")
-        .agg(F.min("bucket_total").alias("cm_estimate"))
-        .select(
-            "user_id",
-            F.col("cnt").alias("exact_cnt"),
-            "cm_estimate",
-            (F.col("cm_estimate") - F.col("cnt")).cast("bigint").alias("overestimate"),
-        )
-    )
+    return cm_audit(tc, "user_id", sketch, ST16_PROBE)

@@ -281,34 +281,56 @@ def current_round() -> int:
 ROTATION_SIZE = 20
 
 
-def rotation_sample(registered: list[str], benched: set[str]) -> list[str]:
-    """Round-10 verdict task 6: the 124 micro-scale-exempt queries had no
-    perf signal of ANY kind — a plan-level regression in one (an
-    accidental extra exchange) stays invisible until it compounds. Each
-    round benches a rotating ~ROTATION_SIZE-name sample of the
-    micro-exempt class at sf0.1 DESPITE the stage floor: the absolute
-    walls are scheduling-noise-dominated (which is why they stay out of
-    the headline and the main queries dict), but a >2x raw move on a
-    rotated name is a cue to diff its plan fingerprint.
+MICRO_EXEMPT = (
+    "micro-scale at sf0.1, wall at/near the per-job scheduling floor — "
+    "benched family siblings carry the plan-cost signal"
+)
 
-    Selection is by residue class, not a moving contiguous window
-    (round-11 review): round r picks the sorted names whose rank
-    satisfies rank % K == (r-1) % K, K = ceil(len/ROTATION_SIZE). For a
-    stable population that visits every name exactly once per K rounds;
-    under registry churn a name's rank shifts only by the number of
-    insertions/removals before it, so its next visit moves by at most
-    that many rounds — a contiguous window re-phased by a changed
-    modulus could instead delay names by a full extra cycle.
-    Structurally-exempt classes (live streaming, fixed-size fixtures,
-    Arrow media decode) stay exempt — their walls measure machinery,
-    not plans, at any rotation."""
+
+def exemption_reason(name: str) -> str:
+    """Why a registered name outside the headline is not benched. The
+    structural classes stay exempt at any rotation, because their walls
+    measure machinery, not plans:
+    - live-streaming runs (``*_live``): the wall is Structured Streaming
+      micro-batch machinery; the batch twin carries the perf signal and
+      the oracle mirror carries live==batch.
+    - ing21: fixed-size pagination fixture (3 pages), SF-invariant.
+    - mm01-mm04: Arrow media-decode fixed cost over the small derived
+      media set; mm05/mm06 carry the multimodal plan signal.
+    Every other name is MICRO_EXEMPT: its min-of-5 wall sits at/near the
+    per-job scheduling floor (spark_stage_floor_sec), so round-over-round
+    deltas would read scheduling noise; only these names rotate."""
+    if name.endswith("_live"):
+        return (
+            "live-streaming run — wall is micro-batch machinery, "
+            "batch twin carries the perf signal"
+        )
+    if name.startswith("ing21"):
+        return "fixed-size pagination fixture — SF-invariant wall"
+    if name[:4] in ("mm01", "mm02", "mm03", "mm04"):
+        return (
+            "Arrow media-decode fixed cost dominates — mm05/mm06 "
+            "carry the multimodal plan signal"
+        )
+    return MICRO_EXEMPT
+
+
+def rotation_sample(registered: list[str], benched: set[str]) -> list[str]:
+    """This round's sample of the MICRO_EXEMPT names, benched at sf0.1
+    despite the stage floor: the walls are noise-dominated (so they stay
+    out of the headline), but a >2x raw move on a rotated name is a cue
+    to diff its plan fingerprint.
+
+    Selection is by residue class, not a moving contiguous window: round
+    r picks the sorted names whose rank satisfies rank % K == (r-1) % K,
+    K = ceil(len/ROTATION_SIZE). For a stable population that visits
+    every name exactly once per K rounds; under registry churn a name's
+    rank shifts only by the number of insertions/removals before it, so
+    its next visit moves by at most that many rounds."""
     micro = sorted(
         n
         for n in registered
-        if n not in benched
-        and not n.endswith("_live")
-        and not n.startswith("ing21")
-        and n[:4] not in ("mm01", "mm02", "mm03", "mm04")
+        if n not in benched and exemption_reason(n) == MICRO_EXEMPT
     )
     if not micro:
         return []
@@ -320,52 +342,17 @@ def rotation_sample(registered: list[str], benched: set[str]) -> list[str]:
 def bench_set_manifest(
     registered: list[str], benched: set[str], rotation: set[str] | None = None
 ) -> dict[str, str]:
-    """Round-9 verdict task 4: the bench-exemption rule used to live in
-    comments and session memory only. Enumerate EVERY registered query as
-    "benched" or "exempt:<reason>" so BENCH_QUERIES.json is the committed
-    membership artifact and 135-of-273 coverage stops being folklore.
-    Round-11: micro-exempt names sampled by this round's rotation are
-    marked "benched:rotation" (timed in queries_rotation, outside the
-    headline).
-
-    Exemption classes:
-    - live-streaming runs (``*_live``): their wall measures Structured
-      Streaming micro-batch machinery, not plan execution; the batch twin
-      carries the perf signal and the oracle mirror carries live==batch.
-    - ing21: fixed-size pagination fixture (3 pages) — SF-invariant wall,
-      no scale signal at any sf.
-    - mm01-mm04: Arrow media-decode stages whose wall is Python/Arrow
-      batch fixed cost over the small derived media set; mm05/mm06 carry
-      the multimodal family's plan signal.
-    - everything else: micro-scale at sf0.1 — min-of-5 wall sits at/near
-      the per-job scheduling floor (spark_stage_floor_sec), so
-      round-over-round deltas would read scheduling noise, not plan cost;
-      a benched family sibling carries the plan-cost signal.
-    """
+    """Every registered query as "benched", "benched:rotation" (timed in
+    queries_rotation, outside the headline) or "exempt:<reason>", so
+    BENCH_QUERIES.json is the committed membership artifact."""
     out: dict[str, str] = {}
     for n in registered:
         if n in benched:
             out[n] = "benched"
         elif rotation and n in rotation:
             out[n] = "benched:rotation"
-        elif n.endswith("_live"):
-            out[n] = (
-                "exempt:live-streaming run — wall is micro-batch machinery, "
-                "batch twin carries the perf signal"
-            )
-        elif n.startswith("ing21"):
-            out[n] = "exempt:fixed-size pagination fixture — SF-invariant wall"
-        elif n[:4] in ("mm01", "mm02", "mm03", "mm04"):
-            out[n] = (
-                "exempt:Arrow media-decode fixed cost dominates — mm05/mm06 "
-                "carry the multimodal plan signal"
-            )
         else:
-            out[n] = (
-                "exempt:micro-scale at sf0.1, wall at/near the per-job "
-                "scheduling floor — benched family siblings carry the "
-                "plan-cost signal"
-            )
+            out[n] = "exempt:" + exemption_reason(n)
     return out
 
 

@@ -23,7 +23,7 @@ from api_etl_pipeline_spark import checkpoint as cp
 def test_reliable_flag_parsing(monkeypatch, value, expected):
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", value)
     mod = importlib.reload(cp)
-    assert mod.RELIABLE is expected
+    assert mod.reliable_enabled() is expected
     monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT")
     importlib.reload(cp)  # restore module state for other tests
 

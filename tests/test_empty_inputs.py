@@ -35,6 +35,10 @@ _REPRESENTATIVE = [
     "sim12_pq_topk",             # PQ: degenerate codebook guard (round 8)
     "maint01_compaction_plan",   # compaction planner over empty manifest (round 8)
     "st14_streaming_sync_live",  # composed sync: empty base + empty stream (round 8)
+    "st06_streaming_tumbling_live",  # staged events + memory-sink drain
+    "st17_span_dedup_live",      # staged documents + memory-sink drain
+    "hh02_countmin_audit",       # Count-Min cells + audit tail
+    "st16_countmin_live",        # streamed sketch + batch audit of the staged file
     # (ing21 deliberately absent: its input is the fixture transport,
     # not a table — it returns 4 provider rows regardless of SF data)
 ]
@@ -54,3 +58,25 @@ def empty_sf_dir(spark, tmp_path_factory):
 def test_query_survives_empty_tables(spark, empty_sf_dir, name):
     df = all_queries()[name].fn(spark, empty_sf_dir)
     assert df.count() == 0
+
+
+def test_dd16_recall_audit_on_empty_tables(spark, empty_sf_dir):
+    """A stratum with no true duplicate (here: no documents at all) is a
+    valid audit input: one row, zero pairs, recall and precision 0.0 —
+    ANSI mode raises on an unguarded zero divisor — and the DuckDB
+    oracle agrees on the same files."""
+    import duckdb
+
+    from tests.oracle import compare
+
+    spec = all_queries()["dd16_lsh_recall_audit"]
+    df = spec.fn(spark, empty_sf_dir)
+    rows = df.collect()
+    assert len(rows) == 1
+    assert (rows[0].n_pairs, rows[0].recall, rows[0].precision) == (0, 0.0, 0.0)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{empty_sf_dir}/{t}.parquet/*.parquet'"
+        )
+    compare(df, con, spec.oracle)

@@ -150,11 +150,11 @@ def test_st13_input_is_actually_doubled(spark):
     also hold if the union silently collapsed to a single source and no
     dedup happened. Pin the premise: the same doubled-union shape
     WITHOUT dedup yields exactly 2x rows."""
-    from api_etl_pipeline_spark.streaming.batch_windows import _stage_events_dir
+    from api_etl_pipeline_spark.streaming.batch_windows import _stage_dir
     from api_etl_pipeline_spark.tables import load_events_stream
     import uuid
 
-    stage_dir = _stage_events_dir(SF_DIR)
+    stage_dir = _stage_dir(SF_DIR, "events")
     doubled = load_events_stream(spark, stage_dir).unionByName(
         load_events_stream(spark, stage_dir)
     )

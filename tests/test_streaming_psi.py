@@ -18,7 +18,7 @@ from api_etl_pipeline_spark.ops.quality import (
     dq07_psi_surface,
 )
 from api_etl_pipeline_spark.registry import all_queries
-from api_etl_pipeline_spark.streaming.batch_windows import _stage_events_dir
+from api_etl_pipeline_spark.streaming.batch_windows import _stage_dir
 from api_etl_pipeline_spark.streaming.stream_ops import windowed_value_histogram
 from api_etl_pipeline_spark.tables import load_events_stream, load_table
 from tests.conftest import SF_DIR
@@ -29,7 +29,7 @@ def _rows(df):
 
 
 def test_live_psi_monitor_equals_batch_twin(spark):
-    stage_dir = _stage_events_dir(SF_DIR)
+    stage_dir = _stage_dir(SF_DIR, "events")
     name = "dq07_" + uuid.uuid4().hex[:10]
     q = (
         windowed_value_histogram(load_events_stream(spark, stage_dir))
