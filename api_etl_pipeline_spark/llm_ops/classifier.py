@@ -194,12 +194,14 @@ def cls01_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
 
+    # a one-class training slice has a zero class count: try_divide gives
+    # NULL there, as DuckDB's division does, where ANSI `/` would raise
     def s0_col() -> Column:
         out = None
         for f in _FEATURES:
-            w = F.col(f"sp_{f}") / F.col("n_pos").cast("double") - F.col(
-                f"sn_{f}"
-            ) / F.col("n_neg").cast("double")
+            w = F.try_divide(
+                F.col(f"sp_{f}"), F.col("n_pos").cast("double")
+            ) - F.try_divide(F.col(f"sn_{f}"), F.col("n_neg").cast("double"))
             t = w * F.col(f)
             out = t if out is None else out + t
         return out

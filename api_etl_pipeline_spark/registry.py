@@ -104,21 +104,17 @@ def _load_all() -> None:
 
 
 # Driver-coverage rotation. The driver's per-round correctness gate samples
-# the FIRST 50 entries of queries() in dict order. This round-15 prefix
-# (the r14 staging plan executed) front-loads, in order:
-#   1. ALL 42 queries whose latest passing driver row is still round 9 —
-#      the entire r9 cohort, verified against the latest-round histogram
-#      at the start of round 15 (r9×42, r10×50, r11×45, r12×48, r13×50,
-#      r14×50, never×2). Note two touched-this-round names (dd18, ret02)
-#      are in this cohort — their r15 rewrites get a same-round driver
-#      row, exactly the freshness the rotation exists to provide.
-#   2. the two staged round-14 additions with no driver row yet: dd25
-#      (simhash recall audit) and cls02 (classifier AUC audit) — the
-#      zero-slack r14 rotation queued them here; DRIVER_STAGED_NEXT_ROUND
-#      is emptied in the same commit, per its contract.
-#   3. 6 fill slots from the r10 cohort, oldest-first alphabetical:
-#      cur09, dd08, dd19, dq09, ev19, ing01.
-# 42 + 2 + 6 = 50 exactly. Nothing is removed — every query stays
+# the FIRST 50 entries of queries() in dict order. The prefix front-loads,
+# in order:
+#   1. the 42 queries whose latest passing driver row was round 9;
+#   2. dd25 and cls02, the two additions that had no driver row yet;
+#   3. cur09 and dd08, fill slots from the round-10 cohort;
+#   4. x26, sim11, decon01 and dq05, the heaviest queries by exec wall,
+#      stage count or construction calls, whose latest driver rows are
+#      rounds 11 and 13: the code the performance work targets gets a
+#      fresh driver row. They replace the round-10 fill slots dd19,
+#      dq09, ev19 and ing01, which have round-15 rows.
+# 42 + 2 + 2 + 4 = 50 exactly. Nothing is removed — every query stays
 # registered and the pytest mirror in tests/test_queries_oracle.py
 # still covers all of them.
 _DRIVER_SAMPLE_PREFIX = [
@@ -139,8 +135,8 @@ _DRIVER_SAMPLE_PREFIX = [
     *[f"x{i:02d}" for i in range(1, 11)], "x25_mad_outliers",
     "dd25_simhash_recall_audit", "cls02_classifier_auc_audit",
     "cur09_pseudonymize_ids", "dd08_embedding_near_dup",
-    "dd19_span_dedup", "dq09_fd_profile_sampled",
-    "ev19_journey_patterns", "ing01_dedup_insert",
+    "x26_weighted_median", "sim11_ann_recall_at_k",
+    "decon01_ngram_overlap", "dq05_referential_integrity",
 ]
 
 # Round-15 additions with NO driver row yet, staged for their FIRST row

@@ -1,7 +1,8 @@
 """Degenerate-input robustness: representative queries from every family
 must run (not crash) on completely EMPTY tables and return no rows —
 the 100 TB analog is an empty partition or an all-filtered scan, which
-must never take down a job."""
+must never take down a job. A one-row cut of every table pins the
+one-class training slice of the classifier family against its oracle."""
 
 from __future__ import annotations
 
@@ -44,14 +45,33 @@ _REPRESENTATIVE = [
 ]
 
 
-@pytest.fixture(scope="module")
-def empty_sf_dir(spark, tmp_path_factory):
-    out = tmp_path_factory.mktemp("empty_sf")
+def _cut_tables(spark, out, rows: int) -> str:
     for t in TABLES:
-        load_table(spark, SF_SMOKE, t).limit(0).write.mode("overwrite").parquet(
+        load_table(spark, SF_SMOKE, t).limit(rows).write.mode("overwrite").parquet(
             str(out / f"{t}.parquet")
         )
     return str(out)
+
+
+def _oracle_compare(spec, df, sf_dir: str) -> None:
+    import duckdb
+
+    from tests.oracle import compare
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet/*.parquet'")
+    compare(df, con, spec.oracle)
+
+
+@pytest.fixture(scope="module")
+def empty_sf_dir(spark, tmp_path_factory):
+    return _cut_tables(spark, tmp_path_factory.mktemp("empty_sf"), 0)
+
+
+@pytest.fixture(scope="module")
+def one_row_sf_dir(spark, tmp_path_factory):
+    return _cut_tables(spark, tmp_path_factory.mktemp("one_row_sf"), 1)
 
 
 @pytest.mark.parametrize("name", _REPRESENTATIVE)
@@ -65,18 +85,19 @@ def test_dd16_recall_audit_on_empty_tables(spark, empty_sf_dir):
     valid audit input: one row, zero pairs, recall and precision 0.0 —
     ANSI mode raises on an unguarded zero divisor — and the DuckDB
     oracle agrees on the same files."""
-    import duckdb
-
-    from tests.oracle import compare
-
     spec = all_queries()["dd16_lsh_recall_audit"]
     df = spec.fn(spark, empty_sf_dir)
     rows = df.collect()
     assert len(rows) == 1
     assert (rows[0].n_pairs, rows[0].recall, rows[0].precision) == (0, 0.0, 0.0)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{empty_sf_dir}/{t}.parquet/*.parquet'"
-        )
-    compare(df, con, spec.oracle)
+    _oracle_compare(spec, df, empty_sf_dir)
+
+
+@pytest.mark.parametrize("name", ["cls01_quality_classifier", "cls02_classifier_auc_audit"])
+def test_classifier_on_one_class_training_slice(spark, one_row_sf_dir, name):
+    """One document makes a one-class training slice, so one class-mean
+    divisor is zero. ANSI mode raises on that division; DuckDB yields
+    NULL, which the untrained guard turns into score 0.0 / FALSE. Spark
+    must match the oracle row for row."""
+    spec = all_queries()[name]
+    _oracle_compare(spec, spec.fn(spark, one_row_sf_dir), one_row_sf_dir)
