@@ -1,21 +1,23 @@
-"""Session-scoped construction memo (round 14, optimization round 1).
+"""Session-scoped construction memo.
 
-The r13 verdict's construction-wall finding: query fn()s re-run bounded
-driver-phase work — parquet footer probes, fixed query-vector collects,
-codebook training — on every construction, and the bench constructs each
-query 5 times (min-of-runs). The sanctioned fix (verdict task 2a, the
-``dd04_components`` / ``_codebook_rows`` device) is one keyed cache per
-(SparkSession, inputs): the cached value is exactly what every caller
-would have rebuilt, so driver hashes are untouched, and the one-time
-build wall is recorded so the bench's ``construction_shared_sec`` /
-``construction_total_sec`` drift guards still see the cost.
+Query fn()s would otherwise re-run bounded driver-phase work — parquet
+footer probes, fixed query-vector and codebook collects, codebook
+training — on every construction, and the bench constructs each query
+5 times (min-of-runs). One keyed cache per (SparkSession, inputs) — the
+``dd04_components`` / ``similarity._codebook`` device — holds exactly
+what every caller would have rebuilt, so driver hashes are untouched,
+and the one-time build wall is recorded so the bench's
+``construction_shared_sec`` / ``construction_total_sec`` drift guards
+still see the cost. A build that consumes another labelled build should
+call it BEFORE entering its own builder; otherwise that wall is counted
+under both labels.
 
 WHAT MAY BE MEMOIZED: bounded construction-time state that feeds a plan
 as data (collected codebooks/query vectors, analyzed scan relations,
 shared component maps). NEVER memoize a materialized subtree of the
 timed query region itself (e.g. a lazy_checkpoint the noop sink would
 otherwise recompute) — that would hollow out the benched computation,
-which the round rules treat as gaming, not optimization.
+which would be gaming the benchmark, not optimizing it.
 
 Keys carry the applicationId so a fresh SparkSession (tests spin many)
 never sees another session's state; stale-session entries are pruned on

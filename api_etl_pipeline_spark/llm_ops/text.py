@@ -1819,14 +1819,20 @@ def tx23_corpus_laws(spark: SparkSession, sf_dir: str) -> DataFrame:
         fold_sum(f"{hx} * {hy}", "decile").alias("hsxy"),
         fold_sum(f"{hx} * {hx}", "decile").alias("hsxx"),
     )
+    # a fit over one point has no slope: try_divide gives NULL there,
+    # as DuckDB's division does, where ANSI `/` would raise
     zslope = F.round(
-        (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-        / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")),
+        F.try_divide(
+            F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"),
+            F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"),
+        ),
         6,
     )
     hbeta = F.round(
-        (F.col("hn") * F.col("hsxy") - F.col("hsx") * F.col("hsy"))
-        / (F.col("hn") * F.col("hsxx") - F.col("hsx") * F.col("hsx")),
+        F.try_divide(
+            F.col("hn") * F.col("hsxy") - F.col("hsx") * F.col("hsy"),
+            F.col("hn") * F.col("hsxx") - F.col("hsx") * F.col("hsx"),
+        ),
         6,
     )
     return (

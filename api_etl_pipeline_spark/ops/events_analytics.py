@@ -313,16 +313,18 @@ def ev06_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         flag("purchase").alias("bought"),
     )
     saw, clicked, bought = F.col("saw"), F.col("clicked"), F.col("bought")
+    # a stage nobody reached has no conversion rate: try_divide gives
+    # NULL there, as DuckDB's division does, where ANSI `/` would raise
     return stages.agg(
         F.sum(saw).cast("bigint").alias("n_viewers"),
         F.sum(saw * clicked).cast("bigint").alias("n_clickers"),
         F.sum(saw * clicked * bought).cast("bigint").alias("n_buyers"),
-        (
-            F.sum(saw * clicked).cast("double") / F.sum(saw).cast("double")
+        F.try_divide(
+            F.sum(saw * clicked).cast("double"), F.sum(saw).cast("double")
         ).alias("view_to_click"),
-        (
-            F.sum(saw * clicked * bought).cast("double")
-            / F.sum(saw * clicked).cast("double")
+        F.try_divide(
+            F.sum(saw * clicked * bought).cast("double"),
+            F.sum(saw * clicked).cast("double"),
         ).alias("click_to_buy"),
     )
 
@@ -1319,16 +1321,19 @@ def ab01_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_a, n_b = F.col("n_a").cast("double"), F.col("n_b").cast("double")
     sum_a, sum_b = F.col("sum_a").cast("double"), F.col("sum_b").cast("double")
     ssq_a, ssq_b = F.col("sumsq_a").cast("double"), F.col("sumsq_b").cast("double")
-    mean_a, mean_b = sum_a / n_a, sum_b / n_b
-    var_a = (ssq_a - sum_a * sum_a / n_a) / (n_a - 1)
-    var_b = (ssq_b - sum_b * sum_b / n_b) / (n_b - 1)
-    z = (mean_b - mean_a) / F.sqrt(var_a / n_a + var_b / n_b)
+    # an arm with fewer than two users has no mean or variance: every
+    # division is try_divide, NULL like DuckDB's, where ANSI `/` raises
+    div = F.try_divide
+    mean_a, mean_b = div(sum_a, n_a), div(sum_b, n_b)
+    var_a = div(ssq_a - div(sum_a * sum_a, n_a), n_a - 1)
+    var_b = div(ssq_b - div(sum_b * sum_b, n_b), n_b - 1)
+    z = div(mean_b - mean_a, F.sqrt(div(var_a, n_a) + div(var_b, n_b)))
     return stats.select(
         "n_a",
         "n_b",
         F.round(mean_a, 6).alias("mean_a"),
         F.round(mean_b, 6).alias("mean_b"),
-        F.round((mean_b - mean_a) / mean_a * 100, 6).alias("lift_pct"),
+        F.round(div(mean_b - mean_a, mean_a) * 100, 6).alias("lift_pct"),
         F.round(z, 6).alias("z_stat"),
     )
 

@@ -96,14 +96,11 @@ ALLOWED: dict[tuple[str, str], str] = {
     ("samp04_temperature_mix", "BroadcastNestedLoopJoin"): "single-row (budget, w_sum) broadcast",
     ("llm03_dataset_card", "BroadcastNestedLoopJoin"): "single-row corpus-total broadcast",
     ("sim01_cosine_topk", "BroadcastNestedLoopJoin"): "5-row query-vector broadcast, non-equi self-exclusion",
-    # r15: the exact-truth leg is the shared sim01_truth build; its
-    # checkpoint plan is captured by whichever consumer constructs
-    # first in a cold all_queries() pass — ret02, which the r15 driver
-    # prefix rotation places before sim11
-    ("ret02_ann_rank_quality+ckpt", "BroadcastNestedLoopJoin"): (
-        "inherited exact leg IS sim01 — same 5-row query-vector "
-        "broadcast, non-equi self-exclusion (lives in the shared "
-        "sim01_truth checkpoint subplan, built by the first consumer)"
+    # a shared build's checkpoint plans are keyed by its group name
+    # (lint_registry), whichever consumer constructs first
+    ("sim01_truth+ckpt", "BroadcastNestedLoopJoin"): (
+        "the shared exact-truth build IS sim01 — same 5-row "
+        "query-vector broadcast, non-equi self-exclusion"
     ),
     ("cur03_snapshot_diff", "SortMergeJoin"): (
         "snapshot diff is a FULL OUTER join of two same-size corpus "
@@ -238,21 +235,21 @@ ALLOWED: dict[tuple[str, str], str] = {
         "forcing a broadcast hint would be wrong at a 100 TB dup-heavy "
         "corpus"
     ),
-    ("gr01_pagerank+ckpt", "SortMergeJoin"): (
+    ("gr01_ranks+ckpt", "SortMergeJoin"): (
         "per-round ranks⋈edges contribution join is fact-fact on src — "
         "the canonical PageRank shuffle; 2 exchanges per round as "
         "documented in SCALE.md"
     ),
-    ("gr01_pagerank+ckpt", "BroadcastNestedLoopJoin"): (
+    ("gr01_ranks+ckpt", "BroadcastNestedLoopJoin"): (
         "single-row dangling-mass scalar aggregate broadcast into each "
         "round's rank update"
     ),
-    ("gr02_bfs_hops+ckpt", "SortMergeJoin"): (
+    ("gr02_bfs+ckpt", "SortMergeJoin"): (
         "frontier expansion joins frontier⋈edges then anti-joins the "
         "known set — both fact-fact on vertex id; each edge is "
         "traversed once across all rounds"
     ),
-    ("gr03_triangle_stats+ckpt", "SortMergeJoin"): (
+    ("gr03_oriented+ckpt", "SortMergeJoin"): (
         "the oriented-edge subtree captured pre-checkpoint contains the "
         "same degree-bounded wedge self-join allowlisted on the final "
         "plan"
@@ -635,11 +632,12 @@ def lint_plan(name: str, plan: str) -> list[Finding]:
 
 def lint_registry(spark: SparkSession, sf_dir: str) -> list[Finding]:
     """Lint every registered query's physical plan — INCLUDING the plans
-    that checkpointing would otherwise hide (round-5 advice): iterative
-    operators (gr01/gr02, dd09…) truncate lineage per round, so their
-    final plan is just an RDD scan. A checkpoint observer captures each
-    pre-truncation DataFrame and lints it under `<name>+ckpt`, deduped
-    by node kind (every round has the same shape), so the per-round
+    that checkpointing would otherwise hide: iterative operators
+    (gr01/gr02, dd09…) truncate lineage per round, so their final plan
+    is just an RDD scan. A checkpoint observer captures each
+    pre-truncation DataFrame and lints it under `<name>+ckpt` (or
+    `<group>+ckpt` for the plans of one shared build), deduped by node
+    kind (every round has the same shape), so the per-round
     join/shuffle anti-pattern coverage applies to iterative queries too
     instead of being a prose-documented blind spot."""
     from api_etl_pipeline_spark.checkpoint import checkpoint_observer
@@ -666,6 +664,16 @@ def lint_registry(spark: SparkSession, sf_dir: str) -> list[Finding]:
             final_plan = plan_text(spec.fn(spark, sf_dir))
         out.extend(lint_plan(name, final_plan))
         groups = SHARED_CHECKPOINT_GROUPS.get(name, ())
+        # a member that runs exactly one not-yet-built shared build (and
+        # checkpoints nothing of its own) captured that build's plans:
+        # key them `<group>+ckpt`, so the allowlist does not depend on
+        # which consumer constructs first
+        pending = [g for g in groups if g not in groups_satisfied]
+        ckpt_key = (
+            f"{pending[0]}+ckpt"
+            if len(pending) == 1 and name not in PRIVATE_CHECKPOINT_MEMBERS
+            else f"{name}+ckpt"
+        )
         # non-vacuous capture guard (round-7 advice): both directions hard.
         # Shared-build members (round 14) capture only when they are the
         # process's FIRST consumer of some build; every build being
@@ -694,7 +702,7 @@ def lint_registry(spark: SparkSession, sf_dir: str) -> list[Finding]:
                                "CHECKPOINTING_QUERIES — update the constant"))
         seen: set[tuple[str, str]] = set()
         for plan in captured:
-            for f in lint_plan(f"{name}+ckpt", plan):
+            for f in lint_plan(ckpt_key, plan):
                 if (f.query, f.node) not in seen:
                     seen.add((f.query, f.node))
                     out.append(f)

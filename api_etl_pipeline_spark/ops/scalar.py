@@ -478,15 +478,17 @@ def x16_regression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
+    # a flag group with one distinct x has no fit: try_divide gives NULL
+    # there, as DuckDB's division does, where ANSI `/` would raise (n >= 1)
+    slope = F.try_divide(n * sxy - sx * sy, n * sxx - sx * sx)
     return moments.select(
         "l_returnflag",
         "n",
         slope.alias("slope"),
         ((sy - slope * sx) / n).alias("intercept"),
-        ((n * sxy - sx * sy) / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))).alias(
-            "pearson_r"
-        ),
+        F.try_divide(
+            n * sxy - sx * sy, F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
+        ).alias("pearson_r"),
     )
 
 

@@ -1,8 +1,12 @@
-"""Degenerate-input robustness: representative queries from every family
-must run (not crash) on completely EMPTY tables and return no rows —
-the 100 TB analog is an empty partition or an all-filtered scan, which
-must never take down a job. A one-row cut of every table pins the
-one-class training slice of the classifier family against its oracle."""
+"""Degenerate-input robustness over the whole registry: every query must
+run (not crash) on completely EMPTY tables and on a ONE-ROW cut of every
+table, and every query reading embeddings on a corpus without the seed
+vectors its codebooks are drawn from. The 100 TB analogs are an empty
+partition, an all-filtered scan, a single-row group and an index built
+over a shard that lacks its seeds, none of which may take down a job.
+Every table-backed query's full output (a collect, never a `count()`,
+which lets the optimizer prune a failing projection away) must equal
+its DuckDB oracle's on the same files."""
 
 from __future__ import annotations
 
@@ -12,42 +16,51 @@ from api_etl_pipeline_spark.registry import all_queries
 from api_etl_pipeline_spark.tables import TABLES, load_table
 from tests.conftest import SF_SMOKE
 
-_REPRESENTATIVE = [
-    "q01_pricing_summary",      # grouped agg
-    "q18_multiway_join",        # star join
-    "q39_shipping_priority",    # topk
-    "w04_running_sum",          # window
-    "ev02_gaps_islands",        # lag + running sum + group
-    "tx01_token_stats",         # text projection
-    "dd03_minhash_signatures",  # explode + hash agg
-    "sim01_cosine_topk",        # vector fold + window
-    "x15_list_aggregation",     # collect_list
-    "q48_range_join_banded",    # banded interval join
-    "dd11_repeated_substrings",  # winnowed fingerprints (round 4)
-    "tx15_rare_term_ratio",      # corpus-df join (round 4)
-    "dd12_segment_dedup_clean",  # segment window + rollup (round 4)
-    "tx16_bm25_topk",            # stats broadcast + rank (round 4)
-    "ev13_time_weighted_value",  # lead window + folded rollup (round 4)
-    "st08_enriched_segment_windows",  # dim join + windowed agg (round 4)
-    "sim10_random_projection",   # literal-matrix scan-project (round 4)
-    "dq07_window_psi_drift",     # fixed-spine PSI vs empty baseline (round 8)
-    "cur06_pii_scrub",           # regex scrub audit (round 8)
-    "samp07_dsir_importance",    # hashed-feature log-weights (round 8)
-    "sim12_pq_topk",             # PQ: degenerate codebook guard (round 8)
-    "maint01_compaction_plan",   # compaction planner over empty manifest (round 8)
-    "st14_streaming_sync_live",  # composed sync: empty base + empty stream (round 8)
+# every name whose input is the tables themselves: `ing*` read the
+# fixture transport (ing21 returns 4 provider rows regardless of SF
+# data) and `_live` names read a stream staged from the tables
+_TABLE_BACKED = sorted(
+    n for n in all_queries() if not n.startswith("ing") and not n.endswith("_live")
+)
+
+# live queries staged from the empty tables: each must drain to no rows
+_LIVE = [
+    "st14_streaming_sync_live",  # composed sync: empty base + empty stream
     "st06_streaming_tumbling_live",  # staged events + memory-sink drain
-    "st17_span_dedup_live",      # staged documents + memory-sink drain
-    "hh02_countmin_audit",       # Count-Min cells + audit tail
-    "st16_countmin_live",        # streamed sketch + batch audit of the staged file
-    # (ing21 deliberately absent: its input is the fixture transport,
-    # not a table — it returns 4 provider rows regardless of SF data)
+    "st17_span_dedup_live",  # staged documents + memory-sink drain
+    "st16_countmin_live",  # streamed sketch + batch audit of the staged file
 ]
 
+# known oracle disagreements on empty tables (not crashes), measured:
+_GRAND_TOTAL = (
+    "DuckDB emits the grouping-sets grand-total row over empty input "
+    "(spark=0 rows, duck=1); Spark emits none"
+)
+_EMPTY_XFAIL = {
+    "q11_rollup": _GRAND_TOTAL,
+    "q12_cube": _GRAND_TOTAL,
+    "q23_grouping_sets": _GRAND_TOTAL,
+    "qsql02_grouping_sets_shared_sql": _GRAND_TOTAL,
+    "dq01_quality_report": (
+        "Spark reports 7 range-check rows (0 checked, NULL bounds) that "
+        "the oracle does not"
+    ),
+    "stats01_table_profile": "Spark returns 0 rows, DuckDB 3",
+}
 
-def _cut_tables(spark, out, rows: int) -> str:
+
+def _cases(names, xfail: dict[str, str]):
+    return [
+        pytest.param(n, marks=pytest.mark.xfail(strict=True, reason=xfail[n]))
+        if n in xfail
+        else n
+        for n in names
+    ]
+
+
+def _cut_tables(spark, out, cut) -> str:
     for t in TABLES:
-        load_table(spark, SF_SMOKE, t).limit(rows).write.mode("overwrite").parquet(
+        cut(t, load_table(spark, SF_SMOKE, t)).write.mode("overwrite").parquet(
             str(out / f"{t}.parquet")
         )
     return str(out)
@@ -66,18 +79,57 @@ def _oracle_compare(spec, df, sf_dir: str) -> None:
 
 @pytest.fixture(scope="module")
 def empty_sf_dir(spark, tmp_path_factory):
-    return _cut_tables(spark, tmp_path_factory.mktemp("empty_sf"), 0)
+    return _cut_tables(spark, tmp_path_factory.mktemp("empty_sf"), lambda t, d: d.limit(0))
 
 
 @pytest.fixture(scope="module")
 def one_row_sf_dir(spark, tmp_path_factory):
-    return _cut_tables(spark, tmp_path_factory.mktemp("one_row_sf"), 1)
+    return _cut_tables(spark, tmp_path_factory.mktemp("one_row_sf"), lambda t, d: d.limit(1))
 
 
-@pytest.mark.parametrize("name", _REPRESENTATIVE)
+@pytest.fixture(scope="module")
+def no_seed_sf_dir(spark, tmp_path_factory):
+    """The smoke tables with embeddings cut to vec_id >= 8: a corpus with
+    rows but none of the ids the flat codebooks (vec_id < 8) and the
+    query set (vec_id < 5) are drawn from."""
+    return _cut_tables(
+        spark,
+        tmp_path_factory.mktemp("no_seed_sf"),
+        lambda t, d: d.filter(d.vec_id >= 8) if t == "embeddings" else d,
+    )
+
+
+@pytest.mark.parametrize("name", _cases(_TABLE_BACKED, _EMPTY_XFAIL) + _LIVE)
 def test_query_survives_empty_tables(spark, empty_sf_dir, name):
-    df = all_queries()[name].fn(spark, empty_sf_dir)
-    assert df.count() == 0
+    spec = all_queries()[name]
+    df = spec.fn(spark, empty_sf_dir)
+    if name in _LIVE:
+        assert df.count() == 0
+    else:
+        _oracle_compare(spec, df, empty_sf_dir)
+
+
+@pytest.mark.parametrize("name", _TABLE_BACKED)
+def test_query_matches_oracle_on_one_row_tables(spark, one_row_sf_dir, name):
+    """One row per table makes every group a singleton: one-class
+    training slices (cls01/cls02), one-point fits (x16, tx23), one-user
+    arms (ab01), a standing store with no rows (dd24). ANSI mode raises
+    on the zero divisors these produce; DuckDB yields NULL, and Spark
+    must match the oracle row for row."""
+    spec = all_queries()[name]
+    _oracle_compare(spec, spec.fn(spark, one_row_sf_dir), one_row_sf_dir)
+
+
+@pytest.mark.parametrize(
+    "name", [n for n in _TABLE_BACKED if "embeddings" in all_queries()[n].oracle]
+)
+def test_query_matches_oracle_without_seed_vectors(spark, no_seed_sf_dir, name):
+    """An empty codebook over a non-empty corpus: ANSI mode raises on
+    element_at(…, 1) of an empty ranked-codebook array evaluated per
+    row, while every oracle's join with no codeword or no query gives
+    no row. Each query reading embeddings must match its oracle."""
+    spec = all_queries()[name]
+    _oracle_compare(spec, spec.fn(spark, no_seed_sf_dir), no_seed_sf_dir)
 
 
 def test_dd16_recall_audit_on_empty_tables(spark, empty_sf_dir):
@@ -91,13 +143,3 @@ def test_dd16_recall_audit_on_empty_tables(spark, empty_sf_dir):
     assert len(rows) == 1
     assert (rows[0].n_pairs, rows[0].recall, rows[0].precision) == (0, 0.0, 0.0)
     _oracle_compare(spec, df, empty_sf_dir)
-
-
-@pytest.mark.parametrize("name", ["cls01_quality_classifier", "cls02_classifier_auc_audit"])
-def test_classifier_on_one_class_training_slice(spark, one_row_sf_dir, name):
-    """One document makes a one-class training slice, so one class-mean
-    divisor is zero. ANSI mode raises on that division; DuckDB yields
-    NULL, which the untrained guard turns into score 0.0 / FALSE. Spark
-    must match the oracle row for row."""
-    spec = all_queries()[name]
-    _oracle_compare(spec, spec.fn(spark, one_row_sf_dir), one_row_sf_dir)

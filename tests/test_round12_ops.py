@@ -96,12 +96,14 @@ def test_group_fine_matches_python_loop(spark):
     norms (to the last ulp) and the same fine→super partition — on the
     real sf0.01 and sf0.1 codebooks."""
     from api_etl_pipeline_spark.llm_ops.similarity import (
-        _codebook_rows,
+        _codebook,
         _group_fine_under_super,
+        _n_supers,
     )
 
     for sf in (SF_DIR, "/root/testdata/sf0.1"):
-        _, k1, _, _, cb = _codebook_rows(spark, sf)
+        cb = _codebook(spark, sf).vecs.tolist()
+        k1 = _n_supers(len(cb))
         norms, groups = _group_fine_under_super(cb, k1)
         exp_norms, exp_groups = _python_group_replay(cb, k1)
         assert norms == exp_norms, sf
@@ -142,15 +144,17 @@ def test_dd23_seed_assignment_is_dd22s(spark):
     registered output cells bit-for-bit (cells compare as positions ==
     vec_ids on the dense-id fixtures)."""
     from api_etl_pipeline_spark.llm_ops.similarity import (
-        _codebook_rows,
+        _codebook,
         _dvec,
         _group_fine_under_super,
+        _n_supers,
         _two_level_assign_broadcast,
     )
     from api_etl_pipeline_spark.tables import load_table
 
     sf = SF_SMOKE
-    _, k1, _, ids, cb = _codebook_rows(spark, sf)
+    ids, cb = _codebook(spark, sf).ids.tolist(), _codebook(spark, sf).vecs.tolist()
+    k1 = _n_supers(len(cb))
     norms, groups = _group_fine_under_super(cb, k1)
     e = load_table(spark, sf, "embeddings")
     base = e.select("vec_id", _dvec("embedding").alias("e"))
@@ -220,17 +224,19 @@ def test_dd23_training_matches_numpy_replay(spark):
 
     from api_etl_pipeline_spark.llm_ops.similarity import (
         DD23_ITERATIONS,
-        _codebook_rows,
+        _codebook,
         _dot,
         _dvec,
         _group_fine_under_super,
+        _n_supers,
         _two_level_assign_broadcast,
     )
     from api_etl_pipeline_spark.tables import load_table
     from pyspark.sql import functions as F
 
     sf = SF_DIR
-    _, k1, k2, _, cb = _codebook_rows(spark, sf)
+    cb = _codebook(spark, sf).vecs.tolist()
+    k1, k2 = _n_supers(len(cb)), len(cb)
     d = len(cb[0])
     e = load_table(spark, sf, "embeddings")
     base = e.select("vec_id", _dvec("embedding").alias("e"))

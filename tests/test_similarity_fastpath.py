@@ -158,3 +158,38 @@ def test_sim10_projection_linearity_and_scale(spark, tmp_path):
         # unnormalized ±1 signs: E[||P v||²] = k·||v||², so /k rescales
         num += sum((p - q) ** 2 for p, q in zip(proj_r[a], proj_r[b])) / _JL_K
     assert 0.6 < num / den < 1.6, f"biased estimator: ratio={num/den:.3f}"
+
+
+def test_fold_helpers_match_python_loops():
+    """The driver-side numpy folds that build codebook norms and PQ/ADC
+    tables must equal the scalar left-fold loop bit-for-bit (the loop is
+    the engines' _dot / _l2sq operation order), across broadcast shapes
+    and on float32-width values like the parquet embeddings."""
+    import numpy as np
+
+    from api_etl_pipeline_spark.llm_ops.similarity import _fold_dot, _fold_l2sq
+
+    def loop_dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    def loop_l2sq(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + (x - y) * (x - y)
+        return acc
+
+    rng = np.random.default_rng(7)
+    A = rng.standard_normal((5, 64)).astype(np.float32).astype(np.float64)
+    B = (rng.standard_normal((8, 64)) * 1e3).astype(np.float32).astype(np.float64)
+    dots = _fold_dot(A[:, None], B[None])
+    dists = _fold_l2sq(A[:, None], B[None])
+    for i in range(5):
+        for j in range(8):
+            a, b = A[i].tolist(), B[j].tolist()
+            assert dots[i, j] == loop_dot(a, b)
+            assert dists[i, j] == loop_l2sq(a, b)
+    assert _fold_dot(A, A).tolist() == [loop_dot(a, a) for a in A.tolist()]
+    assert _fold_dot(np.zeros((0, 0)), np.zeros((0, 0))).shape == (0,)
