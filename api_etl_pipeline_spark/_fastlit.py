@@ -43,6 +43,12 @@ def sql_double(x: float) -> str:
     return repr(x) + "D"
 
 
+def sql_str(s: str) -> str:
+    """SQL text of one string literal: single quotes around ``s`` with its
+    backslashes and single quotes escaped, so it parses back to ``s``."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _l(x: int) -> str:
     return f"{int(x)}L"
 

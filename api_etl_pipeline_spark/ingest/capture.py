@@ -20,6 +20,7 @@ import io
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from api_etl_pipeline_spark._fastlit import sql_str
 from api_etl_pipeline_spark.ingest.redact import redact_headers_json
 
 PRETTY_MAX_BYTES = 2_000_000  # settings.py:13-16
@@ -71,11 +72,12 @@ def capture_projection(attempts: DataFrame) -> DataFrame:
     )
 
 
-def _summary_row(counts: DataFrame, run_id: str, status: str) -> DataFrame:
-    return counts.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(status).alias("status"),
-        F.current_timestamp().alias("finished_at"),
+def _summary_columns(run_id: str, status: str) -> tuple[str, ...]:
+    """The runs row's select items over a row of the three counts."""
+    return (
+        f"{sql_str(run_id)} AS run_id",
+        f"{sql_str(status)} AS status",
+        "current_timestamp() AS finished_at",
         "responses",
         "artifacts",
         "parse_errors",
@@ -89,7 +91,7 @@ def run_summary(
     r = responses.agg(F.count("*").alias("responses"))
     a = artifacts.agg(F.count("*").alias("artifacts"))
     e = parse_errors.agg(F.count("*").alias("parse_errors"))
-    return _summary_row(r.crossJoin(a).crossJoin(e), run_id, status)
+    return r.crossJoin(a).crossJoin(e).selectExpr(*_summary_columns(run_id, status))
 
 
 def run_row(
@@ -102,12 +104,11 @@ def run_row(
 ) -> DataFrame:
     """`run_summary`'s row from counts the driver already holds (e.g.
     observed on the sink writes), so writing it re-runs nothing."""
-    counts = spark.range(0, 1, 1, numPartitions=1).select(
-        F.lit(responses).cast("long").alias("responses"),
-        F.lit(artifacts).cast("long").alias("artifacts"),
-        F.lit(parse_errors).cast("long").alias("parse_errors"),
+    counts = (
+        f"SELECT {int(responses)}L AS responses, {int(artifacts)}L AS artifacts, "
+        f"{int(parse_errors)}L AS parse_errors FROM range(0, 1, 1, 1)"
     )
-    return _summary_row(counts, run_id, status)
+    return spark.sql(f"SELECT {', '.join(_summary_columns(run_id, status))} FROM ({counts})")
 
 
 def write_run_tree(

@@ -17,7 +17,7 @@ known gap vs SQLite atomicity, SURVEY §7.4).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from api_etl_pipeline_spark.ingest.storage import BLOBS_COLUMNS, read_sink
@@ -25,17 +25,8 @@ from api_etl_pipeline_spark.ingest.storage import BLOBS_COLUMNS, read_sink
 DEDUP_KEYS = ("source_url", "sha256")
 
 
-def with_sha256(df: DataFrame, src: str = "body", out: str = "sha256") -> DataFrame:
-    """X1: sha256 hex digest of the body bytes (downloads.py:23-24) plus
-    byte count (A5) — one pass, JVM-side."""
-    return df.withColumn(out, F.sha2(F.col(src), 256)).withColumn(
-        "bytes", F.length(F.col(src)).cast("long")
-    )
-
-
-def blob_bucket(col: Column) -> Column:
-    """X11: 2-hex-char fan-out key (blob_store.py:10)."""
-    return F.substring(col, 1, 2)
+# X11: 2-hex-char fan-out key of a content hash (blob_store.py:10)
+BLOB_BUCKET = "substring(sha256, 1, 2)"
 
 
 def dedup_insert(new_rows: DataFrame, existing: DataFrame | None, keys=DEDUP_KEYS) -> DataFrame:
@@ -54,16 +45,13 @@ def write_blobs(df: DataFrame, blob_root: str) -> None:
     dedupe within the batch AND against the existing sink before the
     append; the 2-char prefix keeps directory fan-out bounded (256 dirs)
     and aligns file layout with the dedup shuffle partitioning."""
-    new = df.select(F.col("sha256"), F.col("body")).dropDuplicates(["sha256"])
+    new = df.select("sha256", "body").dropDuplicates(["sha256"])
     existing = read_sink(new.sparkSession, blob_root, BLOBS_COLUMNS)
     if existing is not None:
         new = new.join(existing.select("sha256"), "sha256", "left_anti")
-    (
-        new.withColumn("bucket", blob_bucket(F.col("sha256")))
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(blob_root)
-    )
+    new.selectExpr("*", f"{BLOB_BUCKET} AS bucket").write.mode("append").partitionBy(
+        "bucket"
+    ).parquet(blob_root)
 
 
 def merge_upsert(existing: DataFrame | None, updates: DataFrame, keys=DEDUP_KEYS) -> DataFrame:

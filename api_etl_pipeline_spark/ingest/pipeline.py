@@ -18,6 +18,13 @@ quarantine rows all read that frame instead of each re-running the
 fixture scan, the joins and the JSON parse. The remaining shuffles are
 the dedup anti-joins against the existing sinks.
 
+One parse per frame. Building a frame costs a py4j round trip per
+DataFrame or Column call, and on one op's few-KB input that driver time
+is a large share of the wall. So the batch is one SQL statement over
+the plan `VALUES` table and the fixture scan, composed from the SQL
+text in `parse`, `sources` and `dedup`, and every other frame is one
+`selectExpr`/`where` over it.
+
 Counts are observed, not re-scanned: `responses` and `parse_errors`
 ride the responses write and `artifacts` the artifacts write
 (`Observation`), and the `runs` row is built from those three numbers.
@@ -39,11 +46,18 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from api_etl_pipeline_spark._fastlit import sql_str
 from api_etl_pipeline_spark.checkpoint import eager_checkpoint
 from api_etl_pipeline_spark.ingest import parse as P
 from api_etl_pipeline_spark.ingest.capture import run_row
-from api_etl_pipeline_spark.ingest.dedup import dedup_insert, with_sha256, write_blobs
-from api_etl_pipeline_spark.ingest.sources import fetch_offline, fixture_scan, plan_source
+from api_etl_pipeline_spark.ingest.dedup import BLOB_BUCKET, dedup_insert, write_blobs
+from api_etl_pipeline_spark.ingest.sources import (
+    FIXTURE_COLUMNS,
+    SYNTH_HEADERS,
+    envelope_columns,
+    fixture_files,
+    plan_values,
+)
 from api_etl_pipeline_spark.ingest.storage import ARTIFACTS_COLUMNS, read_sink
 
 PROVIDERS = ("sec_edgar", "nrc_adams_aps")
@@ -52,12 +66,25 @@ RESPONSE_COLS = ["provider", "method", "url", "params_json", "status_code", "hea
 
 @dataclass
 class IngestResult:
+    """A run's counts and inserted artifacts. `batch` is its materialized
+    fetch batch; the responses and quarantine frames over it are built
+    only when read."""
+
     responses: int
     artifacts: int
     parse_errors: int
-    responses_df: DataFrame
     artifacts_df: DataFrame
-    errors_df: DataFrame
+    batch: DataFrame
+
+    @property
+    def responses_df(self) -> DataFrame:
+        """Metadata fetches ∪ artifact fetches, both captured."""
+        return self.batch.select(*RESPONSE_COLS)
+
+    @property
+    def errors_df(self) -> DataFrame:
+        """Quarantine rows: metadata responses with no artifact URL."""
+        return P.quarantine(self.batch.where("NOT artifact"), "parse_metadata", "NOT parse_error")
 
 
 def _default_plan(provider: str) -> list[dict]:
@@ -83,45 +110,59 @@ def _artifact_fixture(provider: str) -> str:
 
 
 def _fetch_batch(spark: SparkSession, provider: str, fixture_root: str, limit: int) -> DataFrame:
-    """Stages 1-4 as one materialized frame: the metadata and artifact
-    fetch rows (`artifact` tells them apart), with `parse_error` on the
-    metadata rows and `sha256`/`bytes` on the artifact rows."""
-    plan = plan_source(spark, _default_plan(provider), limit)
-    fixtures = fixture_scan(spark, fixture_root, provider)
+    """Stages 1-4 as one statement, materialized: the metadata and
+    artifact fetch rows (`artifact` tells them apart), with `parse_error`
+    on the metadata rows and `sha256`/`bytes` on the artifact rows.
 
-    # stage 1: metadata fetch (S1) — one captured response per plan item
-    meta = fetch_offline(plan, fixtures, provider)
-
+    Both fetches look up the one broadcast fixture table. Each metadata
+    row fans out into itself plus, when its payload yields an artifact
+    URL, an artifact request, and every request row joins the fixtures
+    again. No filter lands on the fixture side of either join, so the
+    two broadcasts plan alike and Spark reuses one: the fixtures are
+    scanned and broadcast once per run."""
+    values, args = plan_values(_default_plan(provider), limit)
+    schema, extract = P.EXTRACT[provider]
+    # nested subqueries, not a WITH clause: written with CTEs, the
+    # statement takes Spark ~1.5x as long to analyze
+    fx = f"(SELECT {', '.join(FIXTURE_COLUMNS)} FROM {{files}}) fx"
+    # stage 1: metadata fetch (S1), one captured response per plan item
+    meta = f"""SELECT /*+ BROADCAST(fx) */ item_index, item_key, url, body
+        FROM (SELECT * FROM {values}) LEFT JOIN {fx} USING (fixture_name)"""
     # stage 2: parse + extract (F1-F4) per provider
-    extracted = P.sec_first_filing(meta) if provider == "sec_edgar" else P.nrc_extract_pdf_url(meta)
+    extracted = f"""SELECT *, {", ".join(extract)}
+        FROM (SELECT *, {P.parse_json_sql(schema)} AS payload FROM ({meta}))"""
+    # stage 3: validate (F5/F6/F10): no artifact URL means quarantine, and
+    # an artifact request otherwise
+    fetches = f"""SELECT item_index, artifact, IF(artifact, artifact_url, url) AS url,
+            IF(artifact, {sql_str(_artifact_fixture(provider))}, NULL) AS fixture_name,
+            body, NOT artifact AND artifact_url IS NULL AS parse_error
+        FROM ({extracted}) LATERAL VIEW explode(array(false, true)) k AS artifact
+        WHERE NOT artifact OR artifact_url IS NOT NULL"""
+    # stage 4: artifact fetch (fixture-backed) + hash: the body's sha256
+    # hex digest (X1, downloads.py:23-24) and byte count (A5)
+    fetched = f"""SELECT /*+ BROADCAST(fx) */ r.item_index, r.url, r.artifact, r.parse_error,
+            IF(r.artifact, fx.body, r.body) AS body
+        FROM ({fetches}) r LEFT JOIN {fx} ON fx.fixture_name = r.fixture_name"""
+    text = f"""SELECT item_index, {", ".join(envelope_columns(provider, headers=":headers"))},
+            artifact, parse_error,
+            IF(artifact, sha2(body, 256), NULL) AS sha256,
+            IF(artifact, CAST(length(body) AS BIGINT), NULL) AS bytes
+        FROM ({fetched})"""
+    files = fixture_files(spark, fixture_root, provider)
+    return eager_checkpoint(spark.sql(text, args | {"headers": SYNTH_HEADERS}, files=files))
 
-    # stage 3: validate (F5/F6/F10) — no artifact URL means quarantine
-    valid = F.col("artifact_url").isNotNull()
-    meta_rows = extracted.select(
-        "item_index",
-        "response_id",
-        *RESPONSE_COLS,
-        F.lit(False).alias("artifact"),
-        (~valid).alias("parse_error"),
-    )
 
-    # stage 4: artifact fetch (fixture-backed) + hash (X1/A5)
-    art_plan = extracted.filter(valid).select(
-        "item_index",
-        "item_key",
-        F.lit(_artifact_fixture(provider)).alias("fixture_name"),
-        F.col("artifact_url").alias("url"),
-    )
-    art_rows = with_sha256(fetch_offline(art_plan, fixtures, provider)).select(
-        "item_index",
-        "response_id",
-        *RESPONSE_COLS,
-        F.lit(True).alias("artifact"),
-        F.lit(False).alias("parse_error"),
+def _artifact_columns(provider: str) -> tuple[str, ...]:
+    """An artifacts-sink row of a hashed artifact fetch row."""
+    return (
+        f"{sql_str(provider)} AS provider",
+        "url AS source_url",
         "sha256",
         "bytes",
+        f"format_string('blobs/%s/%s', {BLOB_BUCKET}, sha256) AS blob_path",
+        "CAST(item_index AS BIGINT) AS response_id",
+        "current_timestamp() AS created_at",
     )
-    return eager_checkpoint(meta_rows.unionByName(art_rows, allowMissingColumns=True))
 
 
 def run_offline_ingest(
@@ -136,42 +177,22 @@ def run_offline_ingest(
         raise KeyError(f"unknown provider {provider!r}; known: {PROVIDERS}")
 
     batch = _fetch_batch(spark, provider, fixture_root, limit)
-    _, errors = P.split_quarantine(
-        batch.filter(~F.col("artifact")),
-        stage="parse_metadata",
-        condition=~F.col("parse_error"),
-    )
-    hashed = batch.filter(F.col("artifact") & F.col("body").isNotNull())
+    hashed = batch.where("artifact AND body IS NOT NULL")
 
     # stage 5: dedup insert (S6/J2) against the existing sink, if any
     existing = read_sink(spark, f"{warehouse}/artifacts", ARTIFACTS_COLUMNS) if warehouse else None
-    new_artifacts = dedup_insert(
-        hashed.select(
-            F.lit(provider).alias("provider"),
-            F.col("url").alias("source_url"),
-            "sha256",
-            "bytes",
-            F.format_string("blobs/%s/%s", F.substring("sha256", 1, 2), F.col("sha256")).alias(
-                "blob_path"
-            ),
-            F.col("item_index").cast("long").alias("response_id"),
-            F.current_timestamp().alias("created_at"),
-        ),
-        existing,
-    )
+    new_artifacts = dedup_insert(hashed.selectExpr(*_artifact_columns(provider)), existing)
 
-    # responses = metadata fetches ∪ artifact fetches (both captured)
-    responses = batch.select(*RESPONSE_COLS)
     if warehouse is None:
-        n_resp, n_art, n_err = responses.count(), new_artifacts.count(), errors.count()
-        return IngestResult(n_resp, n_art, n_err, responses, new_artifacts, errors)
+        counts = batch.selectExpr("count(1) AS n", "count_if(parse_error) AS errors").first()
+        return IngestResult(counts.n, new_artifacts.count(), counts.errors, new_artifacts, batch)
 
     # A1-A3 counters ride the WRITE jobs instead of separate count() scans
     obs_resp, obs_art = Observation(), Observation()
     batch.observe(
-        obs_resp, F.count(F.lit(1)).alias("n"), F.count_if("parse_error").alias("errors")
+        obs_resp, F.expr("count(1) AS n"), F.expr("count_if(parse_error) AS errors")
     ).select(*RESPONSE_COLS).write.mode("append").parquet(f"{warehouse}/responses")
-    new_artifacts.observe(obs_art, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(
+    new_artifacts.observe(obs_art, F.expr("count(1) AS n")).write.mode("append").parquet(
         f"{warehouse}/artifacts"
     )
     write_blobs(hashed, f"{warehouse}/blobs")
@@ -180,4 +201,4 @@ def run_offline_ingest(
     run_row(spark, run_id, "succeeded", n_resp, n_art, n_err).write.mode("append").json(
         f"{warehouse}/runs"
     )
-    return IngestResult(n_resp, n_art, n_err, responses, new_artifacts, errors)
+    return IngestResult(n_resp, n_art, n_err, new_artifacts, batch)

@@ -373,7 +373,7 @@ def ing12_envelope_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3/X13: NRC envelope drift — both roots (results/documents) built as
     real JSON, parsed with the dual-branch schema, extracted with the
     production coalesce chain (ingest/parse.py::nrc_extract_pdf_url)."""
-    from api_etl_pipeline_spark.ingest.parse import nrc_first_result
+    from api_etl_pipeline_spark.ingest.parse import NRC_FIRST_RESULT
     from api_etl_pipeline_spark.ingest.schemas import NRC_SEARCH
 
     d = load_table(spark, sf_dir, "documents")
@@ -389,7 +389,7 @@ def ing12_envelope_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     parsed = d.select("doc_id", F.from_json(payload_str, NRC_SEARCH).alias("payload"))
-    first = nrc_first_result(F.col("payload"))
+    first = F.expr(NRC_FIRST_RESULT)
     url = F.coalesce(first["pdfUrl"], first["document"]["Url"])
     return parsed.select("doc_id", url.alias("artifact_url"))
 

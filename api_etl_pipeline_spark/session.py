@@ -21,11 +21,27 @@ the cache is built once per JVM, when the first class is compiled: a
 JVM whose first session was built elsewhere (e.g. a harness's plain
 ``SparkSession.builder``) keeps the size that session had, 100 by
 default, and ``get_spark`` cannot change it afterwards.
+
+Call-site capture is off (``spark.python.sql.dataFrameDebugging.enabled``
+= false). With it on, PySpark wraps every ``functions.*`` call and Column
+operator to read a conf over py4j, set and clear the JVM's
+``PySparkCurrentOrigin`` and walk the Python stack, which multiplies the
+py4j round trips of building a query: ``F.col`` 13 → 3 calls, ``col + 1``
+and ``.alias`` 11 → 1 (PySpark 4.1.2). Errors keep their error class and message (an ANSI divide by
+zero still raises ``DIVIDE_BY_ZERO``); they lose only the
+"== DataFrame ==" context naming the Python line that built the failing
+expression. PySpark reads the flag once per Python process, from the
+session active at the first wrapped call, so the first session decides
+it: a process whose first session was built elsewhere keeps that
+session's setting.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -42,6 +58,36 @@ def codegen_compiles(spark: SparkSession) -> int:
     """Codegen classes this JVM has compiled so far (each cache miss)."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@contextlib.contextmanager
+def py4j_calls() -> Iterator[list[int]]:
+    """Count the py4j round trips the calling thread makes inside the
+    block: yields a one-item list holding the running count. Wraps the
+    gateway clients' `send_command`, which every call into the JVM goes
+    through. Other threads are not counted; among them is the one py4j
+    sends its deletes of garbage-collected JVM handles from, whenever it
+    gets to them, so counting those would charge the block for handles
+    freed long before it."""
+    from py4j import clientserver, java_gateway
+
+    n = [0]
+    owner = threading.get_ident()
+    classes = (clientserver.ClientServerConnection, java_gateway.GatewayConnection)
+    originals = [cls.send_command for cls in classes]
+    for cls, original in zip(classes, originals):
+
+        def counted(conn, *args, _original=original, **kwargs):
+            if threading.get_ident() == owner:
+                n[0] += 1
+            return _original(conn, *args, **kwargs)
+
+        cls.send_command = counted
+    try:
+        yield n
+    finally:
+        for cls, original in zip(classes, originals):
+            cls.send_command = original
 
 
 def get_spark(app_name: str = "api_etl_pipeline_spark") -> SparkSession:
@@ -63,6 +109,7 @@ def get_spark(app_name: str = "api_etl_pipeline_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # the NRC envelope schema carries both key casings (results/Results,
         # Url/url — nrc_adams_aps.py:92-111); resolving them needs
         # case-sensitive field lookup

@@ -8,13 +8,15 @@ Names mode — construction and execution walls of the named queries:
 
     python tools/probe.py NAME [NAME ...] [-n RUNS] [--raw] [--explain DIR]
 
-prints ``NAME  construction=C  exec=E  compiles=N`` per query (seconds),
-then the JVM's total compile count. Each name first runs once untimed
-(construction plus ``noop`` execution); N is the number of whole-stage
-codegen classes that run compiled, i.e. the query's class footprint net
-of classes an earlier name already put in the cache. The timed runs
-then hit the cache. The total over every registered name in one process
-is the registry's working set, which sizes
+prints ``NAME  construction=C  exec=E  compiles=N  py4j=P`` per query
+(seconds), then the JVM's total compile count and the total of P. Each
+name first runs once untimed (construction plus ``noop`` execution); N
+is the number of whole-stage codegen classes that run compiled, i.e. the
+query's class footprint net of classes an earlier name already put in
+the cache, and P the py4j round trips that construction makes from
+the calling thread (shared builds it triggers included). The timed
+runs then hit the cache. The total of N over every registered name in
+one process is the registry's working set, which sizes
 ``session.CODEGEN_CACHE_ENTRIES``. ``--explain DIR`` also writes
 DIR/<NAME>.txt with the formatted physical plan.
 
@@ -88,7 +90,11 @@ from pyspark.sql import functions as F  # noqa: E402
 import bench  # noqa: E402
 from api_etl_pipeline_spark.ops.plan_lint import plan_text, summarize_plan  # noqa: E402
 from api_etl_pipeline_spark.registry import all_queries  # noqa: E402
-from api_etl_pipeline_spark.session import codegen_compiles, get_spark  # noqa: E402
+from api_etl_pipeline_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+    py4j_calls,
+)
 from api_etl_pipeline_spark.tables import TABLES, load_table  # noqa: E402
 
 SHIFT = 100_000_000
@@ -273,19 +279,24 @@ def scale_mode(spark, names, base_dir: str, sf_dir: str, factor: int, runs: int)
 def names_mode(spark, names: list[str], bench_dir: str, runs: int, explain) -> None:
     specs = all_queries()
     bench.warm(spark, bench_dir)
+    total_calls = 0
     for name in names:
         spark.sparkContext.setJobDescription(name)
         c0 = codegen_compiles(spark)
-        specs[name].fn(spark, bench_dir).write.mode("overwrite").format("noop").save()
+        with py4j_calls() as calls:
+            df = specs[name].fn(spark, bench_dir)
+        df.write.mode("overwrite").format("noop").save()
         compiles = codegen_compiles(spark) - c0
+        total_calls += calls[0]
         construct_s, exec_s = bench.measure(spark, specs[name].fn, bench_dir, runs)
         print(f"{name}  construction={construct_s:.3f}  exec={exec_s:.3f}  "
-              f"compiles={compiles}", flush=True)
+              f"compiles={compiles}  py4j={calls[0]}", flush=True)
         if explain:
             out = Path(explain)
             out.mkdir(parents=True, exist_ok=True)
             (out / f"{name}.txt").write_text(plan_text(specs[name].fn(spark, bench_dir)))
     print(f"# codegen: {codegen_compiles(spark)} classes compiled in this JVM", flush=True)
+    print(f"# py4j: {total_calls} calls constructing the {len(names)} queries", flush=True)
 
 
 def main() -> int:
