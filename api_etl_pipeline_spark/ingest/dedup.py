@@ -32,11 +32,15 @@ BLOB_BUCKET = "substring(sha256, 1, 2)"
 def dedup_insert(new_rows: DataFrame, existing: DataFrame | None, keys=DEDUP_KEYS) -> DataFrame:
     """J2/S6: rows of `new_rows` whose key tuple is absent from `existing`
     — the INSERT OR IGNORE semantics. Also dedupes within the batch
-    itself (first occurrence wins is not defined; any one row per key)."""
+    itself (first occurrence wins is not defined; any one row per key).
+    The result keeps `new_rows`' columns in their order, with or without
+    `existing`: the anti-join takes a condition, because a join `on` the
+    key names would move the keys first."""
     batch_unique = new_rows.dropDuplicates(list(keys))
     if existing is None:
         return batch_unique
-    return batch_unique.join(existing.select(*keys), on=list(keys), how="left_anti")
+    on = F.expr(" AND ".join(f"new.`{k}` = old.`{k}`" for k in keys))
+    return batch_unique.alias("new").join(existing.alias("old"), on, "left_anti")
 
 
 def write_blobs(df: DataFrame, blob_root: str) -> None:

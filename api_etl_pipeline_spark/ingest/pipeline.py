@@ -18,6 +18,14 @@ quarantine rows all read that frame instead of each re-running the
 fixture scan, the joins and the JSON parse. The remaining shuffles are
 the dedup anti-joins against the existing sinks.
 
+The three sink writes run at the same time. None reads another's
+output, and on a few-KB op each is mostly fixed per-job and file-commit
+cost, so one thread per write overlaps them; each thread carries the
+caller's job group and other local properties. The op waits for all
+three and, if any failed, re-raises the first failure. The `runs` row is
+written last, only after all three succeeded: it is the run's commit
+marker.
+
 One parse per frame. Building a frame costs a py4j round trip per
 DataFrame or Column call, and on one op's few-KB input that driver time
 is a large share of the wall. So the batch is one SQL statement over
@@ -31,7 +39,11 @@ ride the responses write and `artifacts` the artifacts write
 
 Fault tolerance: the batch inherits the caveat in checkpoint.py. The
 default executor-local checkpoint dies with its executor and fails the
-run; cluster deployments use its reliable-checkpoint mode.
+run; cluster deployments use its reliable-checkpoint mode. A failed run
+writes no `runs` row, but each sink write that succeeded keeps its rows
+(as when the writes ran one after another). A retry stays idempotent
+for artifacts and blobs, which dedup against their sinks; responses are
+appended again.
 
 Counts semantics match the reference exactly (the e2e oracle,
 tests/test_offline_e2e.py:55-56): responses = metadata fetches +
@@ -41,8 +53,11 @@ rows.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -165,6 +180,17 @@ def _artifact_columns(provider: str) -> tuple[str, ...]:
     )
 
 
+def _write_concurrently(spark: SparkSession, *writes: Callable[[], None]) -> None:
+    """Run the independent `writes` at once, one thread each, and return
+    when all have finished; the first to fail re-raises its error once
+    the others are done. Each thread takes the caller's local properties
+    and tags, so the writes' jobs stay in the caller's job group."""
+    with ThreadPoolExecutor(len(writes), thread_name_prefix="ingest-sink") as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
+        for done in as_completed(futures):
+            done.result()
+
+
 def run_offline_ingest(
     spark: SparkSession,
     provider: str,
@@ -189,13 +215,17 @@ def run_offline_ingest(
 
     # A1-A3 counters ride the WRITE jobs instead of separate count() scans
     obs_resp, obs_art = Observation(), Observation()
-    batch.observe(
+    responses = batch.observe(
         obs_resp, F.expr("count(1) AS n"), F.expr("count_if(parse_error) AS errors")
-    ).select(*RESPONSE_COLS).write.mode("append").parquet(f"{warehouse}/responses")
-    new_artifacts.observe(obs_art, F.expr("count(1) AS n")).write.mode("append").parquet(
-        f"{warehouse}/artifacts"
+    ).select(*RESPONSE_COLS)
+    artifacts = new_artifacts.observe(obs_art, F.expr("count(1) AS n"))
+    # the runs row, the run's commit marker, waits for all three writes
+    _write_concurrently(
+        spark,
+        lambda: responses.write.mode("append").parquet(f"{warehouse}/responses"),
+        lambda: artifacts.write.mode("append").parquet(f"{warehouse}/artifacts"),
+        lambda: write_blobs(hashed, f"{warehouse}/blobs"),
     )
-    write_blobs(hashed, f"{warehouse}/blobs")
     n_resp, n_err = int(obs_resp.get["n"]), int(obs_resp.get["errors"])
     n_art = int(obs_art.get["n"])
     run_row(spark, run_id, "succeeded", n_resp, n_art, n_err).write.mode("append").json(

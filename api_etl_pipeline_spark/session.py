@@ -62,24 +62,28 @@ def codegen_compiles(spark: SparkSession) -> int:
 
 @contextlib.contextmanager
 def py4j_calls() -> Iterator[list[int]]:
-    """Count the py4j round trips the calling thread makes inside the
-    block: yields a one-item list holding the running count. Wraps the
-    gateway clients' `send_command`, which every call into the JVM goes
-    through. Other threads are not counted; among them is the one py4j
-    sends its deletes of garbage-collected JVM handles from, whenever it
-    gets to them, so counting those would charge the block for handles
-    freed long before it."""
+    """Count the py4j round trips made inside the block by the calling
+    thread and by every thread started inside it (e.g. an ingest op's
+    sink writers): yields a one-item list holding the running count.
+    Wraps the gateway clients' `send_command`, which every call into the
+    JVM goes through. Threads already running when the block starts are
+    not counted; among them is the one py4j sends its deletes of
+    garbage-collected JVM handles from, whenever it gets to them, so
+    counting those would charge the block for handles freed long before
+    it."""
     from py4j import clientserver, java_gateway
 
     n = [0]
-    owner = threading.get_ident()
+    lock = threading.Lock()
+    earlier = set(threading.enumerate()) - {threading.current_thread()}
     classes = (clientserver.ClientServerConnection, java_gateway.GatewayConnection)
     originals = [cls.send_command for cls in classes]
     for cls, original in zip(classes, originals):
 
         def counted(conn, *args, _original=original, **kwargs):
-            if threading.get_ident() == owner:
-                n[0] += 1
+            if threading.current_thread() not in earlier:
+                with lock:
+                    n[0] += 1
             return _original(conn, *args, **kwargs)
 
         cls.send_command = counted

@@ -5,10 +5,10 @@ response id), result frame and sink — rows and schemas — must match the
 recorded `golden/ingest_sequence.json` exactly. Timestamps are left out
 (`created_at`, `finished_at`) and binary cells are compared by sha256.
 
-Sinks are compared with their columns in name order: artifacts part
-files written before and after the sink existed order their columns
-differently, and a schema-less read takes the order of whichever footer
-it infers from.
+Sinks are compared with their columns in name order, so the record does
+not depend on which part file's footer a schema-less read infers from.
+Result frames keep their column order: `artifacts_df` has the artifacts
+sink's order whether or not the sink existed before the run.
 """
 
 from __future__ import annotations

@@ -14,7 +14,8 @@ name first runs once untimed (construction plus ``noop`` execution); N
 is the number of whole-stage codegen classes that run compiled, i.e. the
 query's class footprint net of classes an earlier name already put in
 the cache, and P the py4j round trips that construction makes from
-the calling thread (shared builds it triggers included). The timed
+the calling thread and any thread it starts (shared builds it triggers
+included). The timed
 runs then hit the cache. The total of N over every registered name in
 one process is the registry's working set, which sizes
 ``session.CODEGEN_CACHE_ENTRIES``. ``--explain DIR`` also writes
