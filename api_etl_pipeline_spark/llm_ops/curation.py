@@ -132,7 +132,7 @@ def decon01_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (xxhash64 is deterministic; collision odds ~n²/2⁶⁴ are negligible
     and deterministic). Counts are identical unless two DIFFERENT grams
     collide, which the forced-arm oracle test pins at test SFs. Both
-    arms' plans are fingerprinted in plans/r15/."""
+    arms' plans are fingerprinted in plans/r15/ at commit a1c9fd2."""
     from api_etl_pipeline_spark.llm_ops.dedup import _corpus_bytes
 
     d = load_table(spark, sf_dir, "documents")

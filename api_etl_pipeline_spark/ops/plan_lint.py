@@ -43,9 +43,11 @@ the list never goes stale).
 
 from __future__ import annotations
 
+import collections
 import contextlib
 import io
 import re
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -630,38 +632,63 @@ def lint_plan(name: str, plan: str) -> list[Finding]:
     return findings
 
 
-def lint_registry(spark: SparkSession, sf_dir: str) -> list[Finding]:
-    """Lint every registered query's physical plan — INCLUDING the plans
-    that checkpointing would otherwise hide: iterative operators
-    (gr01/gr02, dd09…) truncate lineage per round, so their final plan
-    is just an RDD scan. A checkpoint observer captures each
-    pre-truncation DataFrame and lints it under `<name>+ckpt` (or
-    `<group>+ckpt` for the plans of one shared build), deduped by node
-    kind (every round has the same shape), so the per-round
-    join/shuffle anti-pattern coverage applies to iterative queries too
-    instead of being a prose-documented blind spot."""
-    from api_etl_pipeline_spark.checkpoint import checkpoint_observer
-    from api_etl_pipeline_spark.registry import all_queries
-
-    out: list[Finding] = []
-    # Reset the session construction caches so every shared build is
-    # COLD here: each group's first consumer then always captures its
-    # checkpoint plans, making the lint findings (and the allowlist's
-    # stale-entry check) independent of which tests happened to construct
-    # a consumer earlier in this process. Seeding `groups_satisfied` from
-    # live cache state instead made +ckpt coverage order-dependent — a
-    # test run that warmed gr01_ranks first silently skipped gr01's
-    # per-round plan lint and flagged its allowlist entries stale.
+def cold_caches() -> None:
+    """Clear the session construction memos, so the next consumer of
+    each shared build builds it (and checkpoints it) itself."""
     from api_etl_pipeline_spark import _memo
     from api_etl_pipeline_spark.llm_ops import dedup as _dedup
 
     _memo._MEMO.clear()
     _dedup._COMPONENTS_CACHE.clear()
-    groups_satisfied: set[str] = set()
+
+
+def construct(spark: SparkSession, fn, sf_dir: str) -> tuple[DataFrame, list[str]]:
+    """Build one query under a checkpoint observer: the DataFrame and
+    the pre-truncation plan of every subplan it checkpointed."""
+    from api_etl_pipeline_spark.checkpoint import checkpoint_observer
+
+    captured: list[str] = []
+    with checkpoint_observer(lambda df: captured.append(plan_text(df))):
+        df = fn(spark, sf_dir)
+    return df, captured
+
+
+def registry_plans(
+    spark: SparkSession, sf_dir: str, *, cold_each: bool
+) -> Iterator[tuple[str, str, list[str]]]:
+    """Construct every registered query in registry order and yield
+    `(name, final_plan, captured_plans)`. Checkpointing REPLACES a
+    subtree with an RDD scan, so iterative queries (gr01/gr02, dd09…)
+    show their per-round work only in `captured_plans`.
+
+    The construction memos are cleared first, so every shared build is
+    cold for its first consumer whatever ran earlier in the process.
+    `cold_each` clears them before every query: each query then shows
+    its whole cold construction, independent of registry order, and a
+    shared build's plans appear under every consumer. A construction
+    that raises propagates."""
+    from api_etl_pipeline_spark.registry import all_queries
+
+    cold_caches()
     for name, spec in all_queries().items():
-        captured: list[str] = []
-        with checkpoint_observer(lambda df: captured.append(plan_text(df))):
-            final_plan = plan_text(spec.fn(spark, sf_dir))
+        if cold_each:
+            cold_caches()
+        df, captured = construct(spark, spec.fn, sf_dir)
+        yield name, plan_text(df), captured
+
+
+def lint_registry(spark: SparkSession, sf_dir: str) -> list[Finding]:
+    """Lint every registered query's physical plan — INCLUDING the plans
+    that checkpointing would otherwise hide: each pre-truncation plan is
+    linted under `<name>+ckpt` (or `<group>+ckpt` for the plans of one
+    shared build), deduped by node kind (every round has the same
+    shape), so the join/shuffle anti-pattern coverage applies to
+    iterative queries too. One cold start (`registry_plans`) keeps the
+    findings and the allowlist's stale-entry check independent of which
+    tests constructed a consumer earlier in the process."""
+    out: list[Finding] = []
+    groups_satisfied: set[str] = set()
+    for name, final_plan, captured in registry_plans(spark, sf_dir, cold_each=False):
         out.extend(lint_plan(name, final_plan))
         groups = SHARED_CHECKPOINT_GROUPS.get(name, ())
         # a member that runs exactly one not-yet-built shared build (and
@@ -745,3 +772,183 @@ def summarize_plan(plan: str) -> dict:
         "pushed_filters": pushed,
         "python_stages": python_stages,
     }
+
+
+def fingerprint(final_plan: str, captured: list[str]) -> dict:
+    """`summarize_plan` of a query's final plan with its checkpointed
+    subplans merged in, so checkpointing cannot hide cost: exchange
+    counts add up and node kinds union."""
+    s = summarize_plan(final_plan)
+    for sub in map(summarize_plan, captured):
+        s["exchanges"] += sub["exchanges"]
+        s["broadcasts"] += sub["broadcasts"]
+        for kind in ("joins", "aggregates", "python_stages"):
+            s[kind] = sorted(set(s[kind]) | set(sub[kind]))
+        s["pushed_filters"] = s["pushed_filters"] or sub["pushed_filters"]
+    return s
+
+
+PLANS_HEADER = """\
+# PLANS — physical-plan fingerprint per registered query
+
+Auto-generated by `ops/plan_lint.summarize_plan` over every registered
+query at sf0.001 (plan shapes are scale-invariant; AQE may further
+coalesce at runtime). Regenerate with `python tools/gen_plans.py`.
+
+Legend: Exch = shuffle exchanges in the plan; Bcast = broadcast
+exchanges; joins BHJ/SMJ/SHJ/BNLJ; aggregates Hash/ObjHash/Sort;
+Pushed = non-empty PushedFilters reached a parquet scan; Python =
+Arrow-batched Python stages (the only kind allowed — see plan lint).
+`(+N ckpt)`: the query checkpoints N subplans (iterative rounds /
+reused subtrees); their pre-truncation fingerprints are MERGED into
+the row's totals, so checkpointing cannot hide cost from this table.
+
+| query | Exch | Bcast | joins | aggregates | Pushed | Python |
+|---|---|---|---|---|---|---|
+"""
+
+_ABBR = {
+    "BroadcastHashJoin": "BHJ",
+    "SortMergeJoin": "SMJ",
+    "ShuffledHashJoin": "SHJ",
+    "BroadcastNestedLoopJoin": "BNLJ",
+    "CartesianProduct": "CARTESIAN",
+    "HashAggregate": "Hash",
+    "ObjectHashAggregate": "ObjectHash",
+    "SortAggregate": "Sort",
+    "FlatMapGroupsInPandas": "GroupsInPandas",
+}
+
+
+def _cell(kinds: list[str]) -> str:
+    return ",".join(
+        _ABBR.get(k, k.replace("ArrowEvalPython", "ArrowEval")) for k in kinds
+    ) or "—"
+
+
+def plans_md(walk) -> str:
+    """PLANS.md text for a `registry_plans(..., cold_each=True)` walk:
+    one `fingerprint` row per query, in name order."""
+    rows = []
+    for name, final_plan, captured in sorted(walk):
+        s = fingerprint(final_plan, captured)
+        ckpt = f" (+{len(captured)} ckpt)" if captured else ""
+        pushed = "yes" if s["pushed_filters"] else "—"
+        rows.append(
+            f"| {name} | {s['exchanges']}{ckpt} | {s['broadcasts']} | "
+            f"{_cell(s['joins'])} | {_cell(s['aggregates'])} | {pushed} | "
+            f"{_cell(s['python_stages'])} |"
+        )
+    return PLANS_HEADER + "\n".join(rows) + "\n"
+
+
+# Same-table traversal audit (SCALE.md). When a DataFrame branches,
+# Catalyst compiles each consumer on its own; column pruning usually
+# makes the branch subplans differ, which defeats ReusedExchange, so the
+# shared subtree executes once per branch — a full extra pass of a big
+# table at scale. A repeated scan is not automatically a bug, so every
+# query that scans a big table twice needs a standing reason here.
+BIG_TABLES = {"lineitem", "orders", "events", "documents", "embeddings"}
+
+
+def rescans(final_plan: str) -> dict[str, int]:
+    """{big table: parquet scans} for each big table the final plan
+    scans at least twice. Scans inside checkpointed subplans are not
+    counted: the checkpoint materializes them once."""
+    tables = re.findall(r"InMemoryFileIndex \[[^\]]*?/(\w+)\.parquet", final_plan)
+    counts = collections.Counter(t for t in tables if t in BIG_TABLES)
+    return {t: n for t, n in counts.items() if n >= 2}
+
+
+# Queries with a standing reason to scan a big table more than once. The
+# first block falls in the classes SCALE.md lists: self-joins, set ops,
+# correlated-scalar comparisons, multi-phase statistics, split-vs-split
+# comparisons. A flagged query missing here, or an entry that no longer
+# rescans, fails tests/test_plan_lint.py.
+SCAN_AUDIT_ALLOWED = {
+    "q13_set_ops", "q48_range_join_banded", "dq01_quality_report",
+    "ing18_bloom_dedup_insert", "ing19_merge_upsert",
+    "tx08_tfidf_top_term", "tx16_bm25_topk", "st10_interval_left_join",
+    "mm01_multimodal_features", "mm05_caption_pairs", "tx18_ppl_buckets",
+    "q52_asof_nearest", "sim06_matmul_topk", "ret01_hybrid_rrf",
+    "q21_asof_join", "q22_range_join", "q51_hll_mergeable_distinct",
+    "x25_mad_outliers", "ev05_zero_filled_daily",
+    "ev08_first_click_attribution", "dd05_ngram_jaccard",
+    "dd07_simhash_hamming", "dd11_repeated_substrings",
+    "q20_min_cost_supplier", "q29_top_supplier", "q31_small_qty_revenue",
+    "qsql03_exists_not_exists_shared_sql",
+    "qsql06_correlated_scalar_shared_sql", "ing01_dedup_insert",
+    "ing20_incremental_agg_merge", "tx07_edit_distance",
+    "tx12_fuzzy_blocked_join", "tx15_rare_term_ratio",
+    "llm01_clean_corpus", "llm03_dataset_card", "samp04_temperature_mix",
+    "decon01_ngram_overlap", "mix01_token_budget_mix",
+    "sim01_cosine_topk", "sim02_lsh_bucket_ann", "sim05_ivf_probe_topk",
+    "dd08_embedding_near_dup", "sim07_pq_codes",
+    # decon03: bench-vs-corpus split; tx20: per-doc DF + corpus total,
+    # two-phase — both documented in their docstrings
+    "decon03_embedding_contamination", "tx20_stopword_discovery",
+    # sim11 — exact leg + ANN leg each scan the corpus (recall eval
+    #   compares two independent searches by design)
+    # dd13 — gram sets consumed on both sides of the candidate pair
+    #   join (the dd05 self-join class)
+    # ev17 — per-user first-view agg + purchase probe (split-phase;
+    #   both passes shuffle-bound on user_id)
+    # inc01/inc02 — base/delta disjoint partials from the SAME table
+    #   only in this differential setting; production scans the
+    #   stored base rollup + the delta partition, never history
+    "sim11_ann_recall_at_k", "dd13_containment_dedup",
+    "ev17_conversion_lag", "inc01_rollup_merge", "inc02_pruned_refresh",
+    # ev18 — purchase leg + touch leg of the attribution interval
+    #   join are disjoint type-filtered slices of events (the ev17
+    #   split-phase class)
+    "ev18_linear_attribution",
+    # cur03 — v1/v2 snapshots derive from the one corpus only in
+    #   this differential setting (so the oracle can restate both);
+    #   production diffs two snapshot PATHS, one scan each
+    "cur03_snapshot_diff",
+    # dq07 — the frozen BASELINE histogram is recomputed from the same
+    #   events table the daily histograms scan, only so the oracle can
+    #   restate it; production reads the stored 15-row baseline table
+    #   (the cur03 differential-setting class)
+    "dq07_window_psi_drift",
+    # dq05 — one traversal per FK edge is the audit's definition
+    #   (lineitem 4x: child of 3 FK edges plus the fault-injected
+    #   detection leg); the multi-FK single-scan rewrite is documented
+    #   for 100 TB. (dd14/tx22 also read their base table twice by
+    #   design but do not fire here: their first traversal is lineage-
+    #   truncated, and the audit counts final-plan scans.)
+    "dq05_referential_integrity",
+    # x26 — the two-phase exact weighted median's bucket subtotals
+    #   aggregate the fact table directly (map-side combined to ~1.2k
+    #   (flag, bucket) groups) instead of deriving from the per-price
+    #   relation, because the join's pushed-down null filters made the
+    #   branches non-identical and defeated ReuseExchange (measured:
+    #   deriving from per_price ran the (flag, price) aggregation
+    #   twice, 1.4 s vs 1.1 s). Two concurrent scans, one narrow
+    #   counting pass — the multi-phase-statistics class (x25's
+    #   exact-MAD floor).
+    "x26_weighted_median",
+    # ret02 — the ANN leg scans the corpus (sim02 class; the exact leg
+    #   is checkpointed) — the sim11 two-leg eval comparison is the
+    #   point of the query
+    "ret02_ann_rank_quality",
+    # sim14 — query slice + encode/score pass (the sim01
+    #   probe-vs-corpus class; per-dim stats collected once as bounded
+    #   metadata, the codebook-literal device)
+    "sim14_sq8_topk",
+    # ing22 — archive/window/changed legs are mod-slices of the one
+    #   documents table ONLY in this differential setting (so the
+    #   oracle can restate all three); production reads the stored
+    #   archive and the re-read window from separate paths, one scan
+    #   each, and `changed` would be checkpointed (the cur03/inc01
+    #   differential-setting class)
+    "ing22_reconcile_by_hash",
+    # cls01 — the two train-slice aggregates (class sums, threshold
+    #   min/max) plus the corpus scoring pass each read documents in
+    #   the final plan, but BOTH training scans carry the pushed
+    #   doc_id < 500 filter (bounded slices, not corpus traversals); at
+    #   100 TB the slice aggregates are one tiny partition-pruned read
+    #   each and only the scoring pass sees the corpus — the tx20
+    #   per-phase-stats class
+    "cls01_quality_classifier",
+}

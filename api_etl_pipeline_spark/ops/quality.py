@@ -463,8 +463,9 @@ def dq05_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned and concurrent — at column-store widths, 4 narrow scans beat
     1 wide materialization, and the gap only grows with volume. The
     per-edge scan form therefore STAYS (plans/r15/
-    dq05_referential_integrity_{before,checkpoint,after}.txt; the
-    standing SCALE.md 3.4x row is the production evidence)."""
+    dq05_referential_integrity_{before,checkpoint,after}.txt at commit
+    a1c9fd2; the standing SCALE.md 3.4x row is the production
+    evidence)."""
     def leg(name, child, parent_table, pk):
         parent = (
             load_table(spark, sf_dir, parent_table)

@@ -248,36 +248,9 @@ OPTIONAL = [
 ]
 
 
-def current_round() -> int:
-    """The incoming round number = newest driver CORRECTNESS file + 1,
-    overridable via SPARK_GRAFT_ROUND (round-11 advice: the file-derived
-    value depends on which generated artifacts happen to be on disk — a
-    bare checkout without them, or a tree with an extra in-progress
-    file, silently shifts the rotation window; the env pin makes a bench
-    run reproducible independent of that). The derived/pinned value is
-    logged to stderr by main() and recorded as rotation_round in the
-    output either way."""
-    import re
-
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        # validate the override (round-12 advice): a malformed value
-        # used to surface as a bare ValueError, and 0/negative silently
-        # skewed the rotation residue math
-        if not env.isdigit() or int(env) < 1:
-            raise SystemExit(
-                f"SPARK_GRAFT_ROUND must be a positive integer round "
-                f"number, got {env!r}"
-            )
-        return int(env)
-    rounds = [
-        int(m.group(1))
-        for p in Path(_REPO).glob("CORRECTNESS_r*.json")
-        if (m := re.search(r"_r0*(\d+)$", p.stem))
-    ]
-    return (max(rounds) + 1) if rounds else 1
-
-
+# rotation_sample's default round, recorded as rotation_round; bench a
+# different micro-exempt window by passing another round
+ROTATION_ROUND = 16
 ROTATION_SIZE = 20
 
 
@@ -315,8 +288,10 @@ def exemption_reason(name: str) -> str:
     return MICRO_EXEMPT
 
 
-def rotation_sample(registered: list[str], benched: set[str]) -> list[str]:
-    """This round's sample of the MICRO_EXEMPT names, benched at sf0.1
+def rotation_sample(
+    registered: list[str], benched: set[str], rnd: int = ROTATION_ROUND
+) -> list[str]:
+    """Round `rnd`'s sample of the MICRO_EXEMPT names, benched at sf0.1
     despite the stage floor: the walls are noise-dominated (so they stay
     out of the headline), but a >2x raw move on a rotated name is a cue
     to diff its plan fingerprint.
@@ -335,7 +310,7 @@ def rotation_sample(registered: list[str], benched: set[str]) -> list[str]:
     if not micro:
         return []
     k = -(-len(micro) // ROTATION_SIZE)
-    cls = (current_round() - 1) % k
+    cls = (rnd - 1) % k
     return [n for rank, n in enumerate(micro) if rank % k == cls]
 
 
@@ -549,11 +524,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    print(
-        f"rotation round {current_round()}"
-        f" ({'pinned via SPARK_GRAFT_ROUND' if os.environ.get('SPARK_GRAFT_ROUND') else 'derived from CORRECTNESS_r* files'})",
-        file=sys.stderr,
-    )
     spark = get_spark("bench")
     specs = all_queries()
     names = [n for n in HEADLINE + OPTIONAL if n in specs]
@@ -692,8 +662,8 @@ def main() -> None:
             for n, t in timings.items()
         },
         # round-11: the rotating micro-sample walls + which round's window
-        # this is (current_round is derived from committed driver files)
-        "rotation_round": current_round(),
+        # this is
+        "rotation_round": ROTATION_ROUND,
         "queries_rotation": timings_rotation,
         # round-10: committed membership manifest — every registered query
         # enumerated as benched|exempt:<reason> (round-9 verdict task 4)

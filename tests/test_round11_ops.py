@@ -507,7 +507,7 @@ def test_dd21_oracle_property_random_corpora(tmp_path):
 # ------------------------------------------------ bench rotation sample
 
 
-def test_bench_rotation_sample_covers_and_excludes(monkeypatch):
+def test_bench_rotation_sample_covers_and_excludes():
     """The rotating micro-bench sample: deterministic for a given round,
     excludes benched and structurally-exempt names, residue classes
     cover every micro-exempt name exactly once per K rounds for a
@@ -533,16 +533,12 @@ def test_bench_rotation_sample_covers_and_excludes(monkeypatch):
     k = -(-len(micro) // bench.ROTATION_SIZE)
     assert len(rot) in (len(micro) // k, -(-len(micro) // k))
     # exact once-per-K coverage over K consecutive rounds (stable pop)
-    base = bench.current_round()
-    windows = []
-    for r in range(k):
-        monkeypatch.setattr(bench, "current_round", lambda r=r: base + r)
-        windows.append(bench.rotation_sample(registered, benched))
+    base = bench.ROTATION_ROUND
+    windows = [bench.rotation_sample(registered, benched, base + r) for r in range(k)]
     flat = [n for w in windows for n in w]
     assert sorted(flat) == micro  # partition: every name exactly once
     # churn robustness: adding one micro name shifts each existing
     # name's residue class by at most 1 (rank displacement bound)
-    monkeypatch.setattr(bench, "current_round", lambda: base)
     grown = registered + ["aaa00_churn_probe"]
     micro2 = sorted(micro + ["aaa00_churn_probe"])
     k2 = -(-len(micro2) // bench.ROTATION_SIZE)
