@@ -34,9 +34,16 @@ from pyspark.sql import SparkSession
 
 _MEMO: dict[tuple, Any] = {}
 
-# one-time build walls, keyed by label — bench.shared_walls() merges this
-# with dedup.SHARED_BUILD_WALLS into construction_shared_sec
+# one-time build walls, keyed by label — bench.shared_walls() reports
+# them as construction_shared_sec
 SHARED_BUILD_WALLS: dict[str, float] = {}
+
+
+def reset() -> None:
+    """Drop every memoized build and its recorded wall, so the next
+    consumer of each build builds (and checkpoints) it from cold."""
+    _MEMO.clear()
+    SHARED_BUILD_WALLS.clear()
 
 
 def session_memo(

@@ -68,9 +68,10 @@ def checkpoint_observer(fn: Callable[[DataFrame], None]) -> Iterator[None]:
     context. Every current caller builds plans on the installing thread;
     a future caller fanning out via a thread pool must wrap each task in
     contextvars.copy_context().run(...) or the capture (and any lint
-    depending on it) silently turns vacuous. lint_registry guards the
-    vacuous case by asserting captures are non-empty for queries known
-    to checkpoint."""
+    depending on it) silently turns vacuous. PLANS.md's `(+N ckpt)`
+    column records every query's capture count from cold construction,
+    and tier-1 compares it byte for byte, so a lost capture fails
+    tests/test_plan_lint.py."""
     token = _OBSERVER.set(fn)
     try:
         yield

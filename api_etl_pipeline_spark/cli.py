@@ -104,18 +104,18 @@ def main(argv: list[str] | None = None) -> int:
 
         specs = all_queries()
         names = args.names or sorted(specs)
-        bad = 0
         for name in names:
             if name not in specs:
                 print(f"unknown query {name!r}", file=sys.stderr)
                 return 1
-            plan = plan_lint.plan_text(specs[name].fn(spark, args.sf_dir))
-            for f in plan_lint.lint_plan(name, plan):
-                tag = f.severity.upper() if not f.allowed else "ok"
-                if f.severity == "hard" or not f.allowed:
-                    bad += 1
-                detail = f" — {f.reason}" if f.reason else ""
-                print(f"{name:36s} {tag:4s} {f.node}{detail}")
+        bad = 0
+        walk = plan_lint.registry_plans(spark, args.sf_dir, names)
+        for f in plan_lint.lint_registry(walk):
+            tag = f.severity.upper() if not f.allowed else "ok"
+            if f.severity == "hard" or not f.allowed:
+                bad += 1
+            detail = f" — {f.reason}" if f.reason else ""
+            print(f"{f.query:36s} {tag:4s} {f.node}{detail}")
         print(f"linted {len(names)} queries, {bad} unexplained findings")
         return 1 if bad else 0
 

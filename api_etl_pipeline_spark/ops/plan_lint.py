@@ -35,10 +35,17 @@ Severity model (what actually hurts at 100 TB):
     over a fact-derived relation — which is exactly what the reason
     column must rule out for every allowlisted instance.
 
+Checkpointing replaces a subtree with an RDD scan, so `lint_query` also
+lints every plan the query checkpointed, under `<name>+ckpt`. Each query
+is constructed from cold construction memos (`registry_plans`), so a
+shared build's plans show under every consumer, whatever ran before it.
+
 The linter is part of the public CLI (`cli.py lint`) and enforced in
 tests/test_plan_lint.py: hard findings fail outright; warn findings must
 match the allowlist EXACTLY (an entry that stops occurring fails too, so
-the list never goes stale).
+the list never goes stale). A checkpoint the capture stops seeing would
+leave `+ckpt` coverage vacuous; PLANS.md's `(+N ckpt)` counts, compared
+byte for byte in the same tests, catch that.
 """
 
 from __future__ import annotations
@@ -47,8 +54,9 @@ import collections
 import contextlib
 import io
 import re
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -60,6 +68,12 @@ from pyspark.sql import DataFrame, SparkSession
 # registered query may cache; this makes that machine-checked.
 HARD_NODES = ("CartesianProduct", "InMemoryTableScan", "InMemoryRelation")
 WARN_NODES = ("SortMergeJoin", "SortAggregate", "BroadcastNestedLoopJoin")
+
+# both ANN evaluations checkpoint the shared exact-truth build
+_SIM01_TRUTH = (
+    "the shared exact-truth build IS sim01 — same 5-row query-vector "
+    "broadcast, non-equi self-exclusion"
+)
 
 # warn-level findings with their standing justification; a finding not in
 # this table — or a table row that no longer fires — is a lint failure.
@@ -98,12 +112,8 @@ ALLOWED: dict[tuple[str, str], str] = {
     ("samp04_temperature_mix", "BroadcastNestedLoopJoin"): "single-row (budget, w_sum) broadcast",
     ("llm03_dataset_card", "BroadcastNestedLoopJoin"): "single-row corpus-total broadcast",
     ("sim01_cosine_topk", "BroadcastNestedLoopJoin"): "5-row query-vector broadcast, non-equi self-exclusion",
-    # a shared build's checkpoint plans are keyed by its group name
-    # (lint_registry), whichever consumer constructs first
-    ("sim01_truth+ckpt", "BroadcastNestedLoopJoin"): (
-        "the shared exact-truth build IS sim01 — same 5-row "
-        "query-vector broadcast, non-equi self-exclusion"
-    ),
+    ("sim11_ann_recall_at_k+ckpt", "BroadcastNestedLoopJoin"): _SIM01_TRUTH,
+    ("ret02_ann_rank_quality+ckpt", "BroadcastNestedLoopJoin"): _SIM01_TRUTH,
     ("cur03_snapshot_diff", "SortMergeJoin"): (
         "snapshot diff is a FULL OUTER join of two same-size corpus "
         "versions — full outer cannot broadcast either side by "
@@ -237,21 +247,21 @@ ALLOWED: dict[tuple[str, str], str] = {
         "forcing a broadcast hint would be wrong at a 100 TB dup-heavy "
         "corpus"
     ),
-    ("gr01_ranks+ckpt", "SortMergeJoin"): (
+    ("gr01_pagerank+ckpt", "SortMergeJoin"): (
         "per-round ranks⋈edges contribution join is fact-fact on src — "
         "the canonical PageRank shuffle; 2 exchanges per round as "
         "documented in SCALE.md"
     ),
-    ("gr01_ranks+ckpt", "BroadcastNestedLoopJoin"): (
+    ("gr01_pagerank+ckpt", "BroadcastNestedLoopJoin"): (
         "single-row dangling-mass scalar aggregate broadcast into each "
         "round's rank update"
     ),
-    ("gr02_bfs+ckpt", "SortMergeJoin"): (
+    ("gr02_bfs_hops+ckpt", "SortMergeJoin"): (
         "frontier expansion joins frontier⋈edges then anti-joins the "
         "known set — both fact-fact on vertex id; each edge is "
         "traversed once across all rounds"
     ),
-    ("gr03_oriented+ckpt", "SortMergeJoin"): (
+    ("gr03_triangle_stats+ckpt", "SortMergeJoin"): (
         "the oriented-edge subtree captured pre-checkpoint contains the "
         "same degree-bounded wedge self-join allowlisted on the final "
         "plan"
@@ -442,116 +452,6 @@ LOCAL_SCAN_OK = {
 }
 
 
-# Queries whose construction calls lazy/eager_checkpoint — the observer
-# MUST capture at least one plan for each (round-7 advice: a thread-pooled
-# or refactored caller could silently stop capturing, turning the +ckpt
-# lint coverage vacuous while staying green). Bidirectional: a query that
-# captures without being listed here is also flagged, so this constant
-# cannot silently drift from reality. Regenerate from PLANS.md "+N ckpt"
-# markers (tools/gen_plans.py) plus any additions since.
-#
-# Round 14: queries that consume SHARED once-per-process builds
-# (dedup.dd04_components, the _memo session builds: lsh_bands, the
-# dd16 audit fixtures, the graph iteration states) capture those
-# checkpoints only in whichever consumer constructs FIRST in a
-# process; the vacuous-capture guard treats each build as satisfied
-# once any member captured (or the cache already holds it), so the
-# sharing cannot be silently un-shared. A query may consume several
-# builds; one that captures although ALL its builds are satisfied —
-# and has no private checkpoints of its own — means a cache miss,
-# flagged hard.
-SHARED_CHECKPOINT_GROUPS: dict[str, tuple[str, ...]] = {
-    "dd09_dup_clusters": ("dd04_components",),
-    "dd10_keep_best_dedup": ("dd04_components",),
-    "samp06_cluster_safe_split": ("dd04_components",),
-    "dd04_minhash_lsh_pairs": ("lsh_bands",),
-    "dd13_containment_dedup": ("lsh_bands",),
-    "dd14_incremental_dedup": ("lsh_bands",),
-    "llm01_clean_corpus": ("lsh_bands",),
-    "llm02_corpus_funnel": ("lsh_bands",),
-    "dd16_lsh_recall_audit": ("dd16_derived", "dd16_sig"),
-    "dd17_lsh_geometry_sweep": ("dd16_derived", "dd16_sig"),
-    "dd25_simhash_recall_audit": ("dd16_derived", "dd25_simhash"),
-    "gr01_pagerank": ("gr01_ranks",),
-    "gr02_bfs_hops": ("gr02_bfs",),
-    "gr03_triangle_stats": ("lsh_bands", "gr03_oriented"),
-    # round 14: the trained BPE tokenizer state (checkpointed vocab +
-    # merge rules) is one shared build with three registered consumers
-    "tx21_bpe_train_merges": ("bpe_train",),
-    "tx22_bpe_tokenize_apply": ("bpe_train",),
-    "tx24_tokenizer_fertility": ("bpe_train",),
-    # round 15: the exact brute-force ANN ground truth (sim01's ranking)
-    # is one shared eager build with two evaluation consumers
-    "sim11_ann_recall_at_k": ("sim01_truth",),
-    "ret02_ann_rank_quality": ("sim01_truth",),
-}
-
-# members above that ALSO checkpoint per-construction (non-shared)
-# state — they capture on every construction even with all their
-# shared builds cached, so the cache-miss direction does not apply
-PRIVATE_CHECKPOINT_MEMBERS = {
-    "llm01_clean_corpus",   # live_bands (survivor-filtered band table)
-    "llm02_corpus_funnel",  # flags relation + live_bands
-    "dd14_incremental_dedup",  # dbands (delta band table, per-construction)
-}
-
-CHECKPOINTING_QUERIES = {
-    "cur04_token_drift",
-    "dd04_minhash_lsh_pairs",
-    "dd09_dup_clusters",
-    "dd10_keep_best_dedup",
-    "dd13_containment_dedup",
-    "dd14_incremental_dedup",
-    "dd15_semdedup_prune",
-    "dd16_lsh_recall_audit",  # round 9: derived-corpus + signature checkpoints
-    "dd17_lsh_geometry_sweep",  # round 9: same checkpoints, 8-hash variant
-    "dd25_simhash_recall_audit",  # round 14: derived-corpus + simhash ckpts
-    "cls02_classifier_auc_audit",  # round 14: collapsed score grain feeds AUC + confusion branches
-    "sim13_mmr_rerank",  # round 9: candidate set feeds both lattice sides
-    "hh02_countmin_audit",  # round 9: bigram counts feed sketch + probe + lattice
-    "maint03_zone_map_skip",  # round 9: composite grain feeds both layouts + anchor
-    "mix03_anneal_schedule",  # round 9: source sizes feed schedule + fold + budget
-    "dq08_fd_profile",  # round 9: projected pair columns feed N hypothesis aggs
-    "ret02_ann_rank_quality",  # r15: exact truth is the shared sim01_truth build
-    "sim11_ann_recall_at_k",  # r15: same shared sim01_truth build
-    "st16_countmin_live",  # round 9: batch-audit user counts feed probe + lattice
-    "samp08_temporal_split",  # round 9: (day, user) composite feeds cutoff + labels + flags
-    "dd18_prefix_filter_join",  # round 9: shingle sets feed rank + prefix + both verify sides
-    "dd19_span_dedup",  # round 10: narrow span/sentence arrays feed keep-first + stats fold
-    "dd20_semdedup_production_k",  # round 11: dd15's assignment checkpoint, shared helper
-    "dd22_semdedup_two_level",  # round 11: same checkpoint in the shared verdict tail
-    "dd23_semdedup_trained",  # round 12: same checkpoint, trained-codebook cells
-    "dd24_incremental_semdedup",  # round 12: one-pass assignment feeds both semi-join sides
-    "dd21_substring_dedup",  # round 11: narrow token/window arrays feed keep-first + stats fold
-    "dq09_fd_profile_sampled",  # round 10: projected cols + hashes feed N bottom-K legs + profiles
-    "st17_span_dedup_live",  # round 10: batch narrow relation feeds the stats fold twice
-    "decon02_source_overlap",
-    "dq06_psi_drift",
-    "dq07_window_psi_drift",  # round 8: psi_surface grid checkpoint
-    "ev04_rolling_wau",
-    "ev14_stickiness",
-    "gr01_pagerank",
-    "gr02_bfs_hops",
-    "gr03_triangle_stats",
-    "hh01_heavy_hitter_tokens",
-    "llm01_clean_corpus",
-    "llm02_corpus_funnel",
-    "llm04_curation_funnel",  # round 9: per-row chain + narrow-flags checkpoints
-    "mix02_epoch_upsampling",  # round 8: rates-spine checkpoint
-    "ret01_hybrid_rrf",
-    "samp06_cluster_safe_split",
-    "samp07_dsir_importance",  # round 8: token-bucket + spine checkpoints
-    "tx17_lm_familiarity",
-    "tx18_ppl_buckets",
-    "tx19_pmi_collocations",
-    "tx21_bpe_train_merges",
-    "tx22_bpe_tokenize_apply",
-    "tx23_corpus_laws",  # round 8: token-explode + curve checkpoints
-    "tx24_tokenizer_fertility",  # round 9: same _bpe_train vocab checkpoint as tx22
-    "x25_mad_outliers",
-}
-
-
 @dataclass(frozen=True)
 class Finding:
     query: str
@@ -632,16 +532,6 @@ def lint_plan(name: str, plan: str) -> list[Finding]:
     return findings
 
 
-def cold_caches() -> None:
-    """Clear the session construction memos, so the next consumer of
-    each shared build builds it (and checkpoints it) itself."""
-    from api_etl_pipeline_spark import _memo
-    from api_etl_pipeline_spark.llm_ops import dedup as _dedup
-
-    _memo._MEMO.clear()
-    _dedup._COMPONENTS_CACHE.clear()
-
-
 def construct(spark: SparkSession, fn, sf_dir: str) -> tuple[DataFrame, list[str]]:
     """Build one query under a checkpoint observer: the DataFrame and
     the pre-truncation plan of every subplan it checkpointed."""
@@ -653,87 +543,46 @@ def construct(spark: SparkSession, fn, sf_dir: str) -> tuple[DataFrame, list[str
     return df, captured
 
 
-def registry_plans(
-    spark: SparkSession, sf_dir: str, *, cold_each: bool
-) -> Iterator[tuple[str, str, list[str]]]:
-    """Construct every registered query in registry order and yield
-    `(name, final_plan, captured_plans)`. Checkpointing REPLACES a
-    subtree with an RDD scan, so iterative queries (gr01/gr02, dd09…)
-    show their per-round work only in `captured_plans`.
+class PlanRecord(NamedTuple):
+    name: str
+    final_plan: str
+    captured: list[str]  # pre-checkpoint plans, in checkpoint order
+    memo_keys: list[tuple]  # construction-memo keys the query created
 
-    The construction memos are cleared first, so every shared build is
-    cold for its first consumer whatever ran earlier in the process.
-    `cold_each` clears them before every query: each query then shows
-    its whole cold construction, independent of registry order, and a
-    shared build's plans appear under every consumer. A construction
-    that raises propagates."""
+
+def registry_plans(
+    spark: SparkSession, sf_dir: str, names: Iterable[str] | None = None
+) -> Iterator[PlanRecord]:
+    """Construct each of `names` (default: every registered query, in
+    registry order) from cold construction memos and yield its
+    `PlanRecord`. Checkpointing REPLACES a subtree with an RDD scan, so
+    iterative queries (gr01/gr02, dd09…) show their per-round work only
+    in `captured`. The memos are cleared before every query, so each
+    record is independent of what ran earlier in the process, and a
+    shared build's plans and memo key appear under every consumer. A
+    construction that raises propagates."""
+    from api_etl_pipeline_spark import _memo
     from api_etl_pipeline_spark.registry import all_queries
 
-    cold_caches()
-    for name, spec in all_queries().items():
-        if cold_each:
-            cold_caches()
-        df, captured = construct(spark, spec.fn, sf_dir)
-        yield name, plan_text(df), captured
+    specs = all_queries()
+    for name in names or specs:
+        _memo.reset()
+        df, captured = construct(spark, specs[name].fn, sf_dir)
+        yield PlanRecord(name, plan_text(df), captured, [k[1:] for k in _memo._MEMO])
 
 
-def lint_registry(spark: SparkSession, sf_dir: str) -> list[Finding]:
-    """Lint every registered query's physical plan — INCLUDING the plans
-    that checkpointing would otherwise hide: each pre-truncation plan is
-    linted under `<name>+ckpt` (or `<group>+ckpt` for the plans of one
-    shared build), deduped by node kind (every round has the same
-    shape), so the join/shuffle anti-pattern coverage applies to
-    iterative queries too. One cold start (`registry_plans`) keeps the
-    findings and the allowlist's stale-entry check independent of which
-    tests constructed a consumer earlier in the process."""
-    out: list[Finding] = []
-    groups_satisfied: set[str] = set()
-    for name, final_plan, captured in registry_plans(spark, sf_dir, cold_each=False):
-        out.extend(lint_plan(name, final_plan))
-        groups = SHARED_CHECKPOINT_GROUPS.get(name, ())
-        # a member that runs exactly one not-yet-built shared build (and
-        # checkpoints nothing of its own) captured that build's plans:
-        # key them `<group>+ckpt`, so the allowlist does not depend on
-        # which consumer constructs first
-        pending = [g for g in groups if g not in groups_satisfied]
-        ckpt_key = (
-            f"{pending[0]}+ckpt"
-            if len(pending) == 1 and name not in PRIVATE_CHECKPOINT_MEMBERS
-            else f"{name}+ckpt"
-        )
-        # non-vacuous capture guard (round-7 advice): both directions hard.
-        # Shared-build members (round 14) capture only when they are the
-        # process's FIRST consumer of some build; every build being
-        # satisfied stands in for their own capture, and a LATER
-        # all-shared member capturing means the shared cache missed —
-        # flagged, so sharing can't silently break.
-        if name in CHECKPOINTING_QUERIES and not captured:
-            if not (groups and all(g in groups_satisfied for g in groups)):
-                out.append(Finding(name, "vacuous-checkpoint-capture", "hard", False,
-                                   "listed in CHECKPOINTING_QUERIES but the observer "
-                                   "captured nothing — checkpoint call lost or moved "
-                                   "off-thread"))
-        if captured and groups:
-            if (
-                all(g in groups_satisfied for g in groups)
-                and name not in PRIVATE_CHECKPOINT_MEMBERS
-            ):
-                out.append(Finding(name, "shared-build-cache-miss", "hard", False,
-                                   f"captured checkpoints although shared builds "
-                                   f"{groups} already ran this process — a "
-                                   f"cache keyed wrong or bypassed"))
-            groups_satisfied.update(groups)
-        if captured and name not in CHECKPOINTING_QUERIES:
-            out.append(Finding(name, "unlisted-checkpoint-capture", "hard", False,
-                               "captures pre-checkpoint plans but is missing from "
-                               "CHECKPOINTING_QUERIES — update the constant"))
-        seen: set[tuple[str, str]] = set()
-        for plan in captured:
-            for f in lint_plan(ckpt_key, plan):
-                if (f.query, f.node) not in seen:
-                    seen.add((f.query, f.node))
-                    out.append(f)
-    return out
+def lint_query(name: str, final_plan: str, captured: list[str]) -> list[Finding]:
+    """Findings of one query: its final plan under `name`, and its
+    pre-checkpoint plans under `<name>+ckpt`, once per node kind (every
+    round of a loop has the same shape)."""
+    key = f"{name}+ckpt"
+    ckpt = {f.node: f for plan in captured for f in lint_plan(key, plan)}
+    return lint_plan(name, final_plan) + list(ckpt.values())
+
+
+def lint_registry(walk: Iterable[PlanRecord]) -> list[Finding]:
+    """`lint_query` over every record of a `registry_plans` walk."""
+    return [f for r in walk for f in lint_query(r.name, r.final_plan, r.captured)]
 
 
 def summarize_plan(plan: str) -> dict:
@@ -826,16 +675,16 @@ def _cell(kinds: list[str]) -> str:
     ) or "—"
 
 
-def plans_md(walk) -> str:
-    """PLANS.md text for a `registry_plans(..., cold_each=True)` walk:
-    one `fingerprint` row per query, in name order."""
+def plans_md(walk: Iterable[PlanRecord]) -> str:
+    """PLANS.md text for a `registry_plans` walk: one `fingerprint` row
+    per query, in name order."""
     rows = []
-    for name, final_plan, captured in sorted(walk):
-        s = fingerprint(final_plan, captured)
-        ckpt = f" (+{len(captured)} ckpt)" if captured else ""
+    for r in sorted(walk):
+        s = fingerprint(r.final_plan, r.captured)
+        ckpt = f" (+{len(r.captured)} ckpt)" if r.captured else ""
         pushed = "yes" if s["pushed_filters"] else "—"
         rows.append(
-            f"| {name} | {s['exchanges']}{ckpt} | {s['broadcasts']} | "
+            f"| {r.name} | {s['exchanges']}{ckpt} | {s['broadcasts']} | "
             f"{_cell(s['joins'])} | {_cell(s['aggregates'])} | {pushed} | "
             f"{_cell(s['python_stages'])} |"
         )

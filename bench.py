@@ -407,19 +407,14 @@ def spark_stage_floor(spark) -> float:
 
 
 def shared_walls() -> dict[str, float]:
-    """One-time shared-build walls recorded at their build sites (r14:
-    dedup.SHARED_BUILD_WALLS — the dd04_components map — plus the
-    generic session-memo walls: load_table footer probes, collected
-    codebooks/query sets). Collected via a function so modules that
-    register walls lazily (first consumer builds) are read AFTER the
-    timing loop populated them."""
+    """One-time shared-build walls recorded at their build sites
+    (`_memo.session_memo`: the dd04_components map, load_table footer
+    probes, collected codebooks/query sets). Collected via a function so
+    modules that register walls lazily (first consumer builds) are read
+    AFTER the timing loop populated them."""
     from api_etl_pipeline_spark import _memo
-    from api_etl_pipeline_spark.llm_ops import dedup
 
-    out = dict(dedup.SHARED_BUILD_WALLS)
-    for k, v in _memo.SHARED_BUILD_WALLS.items():
-        out[k] = out.get(k, 0.0) + v
-    return out
+    return dict(_memo.SHARED_BUILD_WALLS)
 
 
 def warm(spark, data_dir: str) -> None:
@@ -518,6 +513,38 @@ def cpu_calibration_parallel(n_threads: int = 32) -> float:
             list(pool.map(lambda _: hashlib.sha256(blob).hexdigest(), range(n_threads)))
             times.append(time.perf_counter() - t0)
     return round(statistics.median(times), 4)
+
+
+def emit_parts(part_key: str, inner_key: str, items: dict, limit: int = 390) -> None:
+    """Print ``items`` as numbered JSON lines of at most ``limit`` bytes:
+    {"<part_key>": i, "of": n, "<inner_key>": {subset}}. Chunks are sized
+    against the digit width of n, widened until n fits it. A single item
+    over the limit gets a line of its own, noted on stderr."""
+    width = 1
+    while True:
+        widest = 10**width - 1
+        chunks: list[dict] = []
+        cur: dict = {}
+        for k, v in items.items():
+            line = {part_key: widest, "of": widest, inner_key: {**cur, k: v}}
+            if cur and len(json.dumps(line)) > limit:
+                chunks.append(cur)
+                cur = {}
+            cur[k] = v
+        if cur:
+            chunks.append(cur)
+        if len(str(len(chunks))) <= width:
+            break
+        width += 1
+    for i, c in enumerate(chunks, 1):
+        line = json.dumps({part_key: i, "of": len(chunks), inner_key: c})
+        if len(line) > limit:
+            print(
+                f"{part_key} {i}: one item alone is {len(line)} B, over the "
+                f"{limit} B part-line limit",
+                file=sys.stderr,
+            )
+        print(line)
 
 
 def main() -> None:
@@ -681,7 +708,7 @@ def main() -> None:
     # the full line outgrew the tail rounds ago, and the compact line had
     # grown construction dicts to ~1.9 KB of the 2 KB tail (one more entry
     # away from losing the headline parse entirely). Now every per-query
-    # dict is ALSO emitted as chunked standalone JSON lines, each < 400
+    # dict is ALSO emitted as chunked standalone JSON lines, each <= 390
     # bytes ({"queries_part": i, "of": n, "queries": {...}}), printed
     # between the full line and the compact line so (a) a driver that
     # scans stdout for part-lines can reassemble all of them, (b) the
@@ -699,25 +726,6 @@ def main() -> None:
         except OSError as exc:
             print(f"could not write {f}: {exc}", file=sys.stderr)
     print(json.dumps(full))
-
-    def emit_parts(part_key: str, inner_key: str, items: dict, limit: int = 390):
-        """Print ``items`` as numbered JSON lines each under ``limit``
-        bytes: {"<part_key>": i, "of": n, "<inner_key>": {subset}}."""
-        if not items:
-            return
-        chunks: list[dict] = []
-        cur: dict = {}
-        for k, v in items.items():
-            cur[k] = v
-            probe = json.dumps({part_key: 999, "of": 999, inner_key: cur})
-            if len(probe) > limit and len(cur) > 1:
-                cur.pop(k)
-                chunks.append(cur)
-                cur = {k: v}
-        if cur:
-            chunks.append(cur)
-        for i, c in enumerate(chunks, 1):
-            print(json.dumps({part_key: i, "of": len(chunks), inner_key: c}))
 
     emit_parts("construction_part", "construction_sec", full["construction_sec"])
     emit_parts(

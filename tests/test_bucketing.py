@@ -15,6 +15,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from api_etl_pipeline_spark import _memo
 from api_etl_pipeline_spark.ops import plan_lint
 from api_etl_pipeline_spark.registry import all_queries
 from api_etl_pipeline_spark.tables import TABLES, load_table
@@ -109,7 +110,7 @@ def test_registered_queries_on_bucketed_catalog(spark, managed_tables, no_broadc
     for name in ("q18_multiway_join", "dd04_minhash_lsh_pairs"):
         exchanges, rows = {}, {}
         for layout in (SF_DIR, f"catalog:{managed_tables}"):
-            plan_lint.cold_caches()  # each layout builds its shared state
+            _memo.reset()  # each layout builds its shared state
             df, captured = plan_lint.construct(spark, specs[name].fn, layout)
             plan = plan_lint.plan_text(df)
             exchanges[layout] = plan_lint.fingerprint(plan, captured)["exchanges"]

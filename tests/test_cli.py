@@ -4,8 +4,10 @@ codes, and the error.txt failure capture — in-process via cli.main."""
 from __future__ import annotations
 
 import json
+import re
 
 from api_etl_pipeline_spark.cli import main
+from tests.conftest import SF_SMOKE
 
 
 def test_cli_run_happy_path(spark, tmp_path, capsys):
@@ -65,6 +67,20 @@ def test_cli_list_and_query(spark, capsys):
     assert "rows: 1" in capsys.readouterr().out
 
     assert main(["query", "definitely_not_a_query"]) == 1
+
+
+def test_cli_lint_reports_checkpointed_plans(spark, capsys):
+    """`cli lint` runs the tier-1 lint: gr01's per-round joins live only
+    in its checkpointed plans, and they are reported (allowlisted)."""
+    rc = main(["lint", "gr01_pagerank", "--sf-dir", SF_SMOKE])
+    out = capsys.readouterr().out
+    assert rc == 0, out
+    assert re.search(r"^gr01_pagerank\+ckpt +ok +SortMergeJoin", out, re.M), out
+
+
+def test_cli_lint_unknown_name(spark, capsys):
+    assert main(["lint", "no_such_query"]) == 1
+    assert "unknown query 'no_such_query'" in capsys.readouterr().err
 
 
 def test_sql_surface(spark):

@@ -5,11 +5,13 @@ identities, and the shared dd04_components build's cache semantics."""
 from __future__ import annotations
 
 import hashlib
+import time
 
 import duckdb
 import pytest
 
 from api_etl_pipeline_spark.registry import all_queries
+from tests.conftest import SF_SMOKE
 
 SF_01 = "/root/testdata/sf0.01"
 
@@ -135,18 +137,42 @@ def test_dd04_components_cache_reuse(spark):
     SAME DataFrame object for repeated (session, sf, geometry) calls —
     consumers share one build — and record its build wall exactly once
     per key."""
+    from api_etl_pipeline_spark import _memo
     from api_etl_pipeline_spark.llm_ops import dedup
 
-    dedup._COMPONENTS_CACHE.clear()
-    dedup.SHARED_BUILD_WALLS.clear()
+    _memo.reset()
+    dedup.dd04_bands(spark, SF_01)  # the labelled build it reads
+    _memo.SHARED_BUILD_WALLS.clear()
     a = dedup.dd04_components(spark, SF_01)
     b = dedup.dd04_components(spark, SF_01)
     assert a is b
-    assert list(dedup.SHARED_BUILD_WALLS) == ["dd04_components[sf0.01]"]
-    wall = dedup.SHARED_BUILD_WALLS["dd04_components[sf0.01]"]
+    assert list(_memo.SHARED_BUILD_WALLS) == ["dd04_components[sf0.01]"]
+    wall = _memo.SHARED_BUILD_WALLS["dd04_components[sf0.01]"]
     c = dedup.dd04_components(spark, SF_01)
     assert c is a
-    assert dedup.SHARED_BUILD_WALLS["dd04_components[sf0.01]"] == wall
+    assert _memo.SHARED_BUILD_WALLS["dd04_components[sf0.01]"] == wall
+
+
+def test_dd04_components_wall_excludes_the_band_build(spark, monkeypatch):
+    """dd04_components' wall is the component loop alone: the lsh_bands
+    build it consumes records its own wall, so a first consumer (dd09
+    here) does not count the band build under both labels."""
+    from api_etl_pipeline_spark import _memo
+    from api_etl_pipeline_spark.llm_ops import dedup
+
+    sleep_s = 4.0
+    band_build = dedup._lsh_bands
+
+    def slow_band_build(sig):
+        time.sleep(sleep_s)
+        return band_build(sig)
+
+    monkeypatch.setattr(dedup, "_lsh_bands", slow_band_build)
+    _memo.reset()
+    all_queries()["dd09_dup_clusters"].fn(spark, SF_SMOKE)
+    walls = _memo.SHARED_BUILD_WALLS
+    assert walls["lsh_bands[sf0.001]"] >= sleep_s
+    assert walls["dd04_components[sf0.001]"] < sleep_s, walls
 
 
 def _py_cls02(sf_dir: str):

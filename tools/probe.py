@@ -89,6 +89,7 @@ sys.path.insert(0, str(REPO))
 from pyspark.sql import functions as F  # noqa: E402
 
 import bench  # noqa: E402
+from api_etl_pipeline_spark import _memo  # noqa: E402
 from api_etl_pipeline_spark.ops.plan_lint import plan_text, summarize_plan  # noqa: E402
 from api_etl_pipeline_spark.registry import all_queries  # noqa: E402
 from api_etl_pipeline_spark.session import (  # noqa: E402
@@ -207,23 +208,11 @@ def register_bucketed(spark, data_dir: str, prefix: str) -> None:
     marker.write_text(data_dir)
 
 
-def reset_memos() -> None:
-    """Drop every construction memo and its recorded walls, so the next
-    scale pays (and records) its shared builds from cold."""
-    from api_etl_pipeline_spark import _memo
-    from api_etl_pipeline_spark.llm_ops import dedup
-
-    _memo._MEMO.clear()
-    _memo.SHARED_BUILD_WALLS.clear()
-    dedup._COMPONENTS_CACHE.clear()
-    dedup.SHARED_BUILD_WALLS.clear()
-
-
 def probe_scale(spark, names: list[str], data_dir: str, runs: int) -> tuple[dict, dict, dict]:
     """(exec walls, plan fingerprints, shared-build walls by family) of
     ``names`` on ``data_dir``, from cold memos."""
     specs = all_queries()
-    reset_memos()
+    _memo.reset()
     bench.warm(spark, data_dir)
     walls, prints = {}, {}
     for name in names:
