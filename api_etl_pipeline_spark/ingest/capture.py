@@ -4,7 +4,8 @@ The reference writes a per-run directory tree of JSON documents
 (run_capture.py). Spark-first, provenance is three tables:
 
 - attempts   — the append-only event log (one row per HTTP attempt),
-               numbered with a window (A2/W1 replaces the mutable counter);
+               numbered with a window (A2/W1 replaces the mutable
+               counter; `queries.ing07_attempt_numbering`);
 - responses  — successful captures (derived from attempts);
 - runs       — one summary row per run (A3 count rollup, S10 run.json).
 
@@ -16,8 +17,9 @@ gzip copy is an output-codec option at write time.
 from __future__ import annotations
 
 import io
+from datetime import UTC, datetime
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from api_etl_pipeline_spark._fastlit import sql_str
@@ -46,14 +48,6 @@ class LogTee(io.TextIOBase):
     def flush(self) -> None:
         for stream in self._streams:
             stream.flush()
-
-
-def number_attempts(attempts: DataFrame) -> DataFrame:
-    """W1/A2: monotonic per-run attempt numbering (the reference's
-    `_attempt_counter`, run_capture.py:87,113-114) — a row_number window
-    ordered by the deterministic (item_index, url) event order."""
-    w = Window.partitionBy("run_id").orderBy("item_index", "url", "method")
-    return attempts.withColumn("attempt_seq", F.row_number().over(w))
 
 
 def capture_projection(attempts: DataFrame) -> DataFrame:
@@ -94,21 +88,28 @@ def run_summary(
     return r.crossJoin(a).crossJoin(e).selectExpr(*_summary_columns(run_id, status))
 
 
-def run_row(
-    spark: SparkSession,
+def run_record(
     run_id: str,
     status: str,
     responses: int,
     artifacts: int,
     parse_errors: int,
-) -> DataFrame:
-    """`run_summary`'s row from counts the driver already holds (e.g.
-    observed on the sink writes), so writing it re-runs nothing."""
-    counts = (
-        f"SELECT {int(responses)}L AS responses, {int(artifacts)}L AS artifacts, "
-        f"{int(parse_errors)}L AS parse_errors FROM range(0, 1, 1, 1)"
-    )
-    return spark.sql(f"SELECT {', '.join(_summary_columns(run_id, status))} FROM ({counts})")
+    finished_at: datetime,
+) -> dict:
+    """`run_summary`'s row as a JSON object, from counts the driver
+    already holds (e.g. observed on the sink writes). Keys are in the
+    row's column order. `finished_at` (an aware datetime) becomes the
+    text Spark's JSON writer gives a timestamp in the engine's UTC
+    session, `yyyy-MM-dd'T'HH:mm:ss.SSSXXX`: `2025-07-15T09:30:00.123Z`."""
+    stamp = finished_at.astimezone(UTC).replace(tzinfo=None).isoformat(timespec="milliseconds")
+    return {
+        "run_id": run_id,
+        "status": status,
+        "finished_at": f"{stamp}Z",
+        "responses": responses,
+        "artifacts": artifacts,
+        "parse_errors": parse_errors,
+    }
 
 
 def write_run_tree(
@@ -179,8 +180,6 @@ def build_run_id(existing: set[str] | DataFrame, provider: str, now=None) -> str
     row per historical run). Driver-side by design, like the
     reference's: run naming happens once per run, before any
     distributed work."""
-    from datetime import UTC, datetime
-
     if not isinstance(existing, set):
         existing = {r["run_id"] for r in existing.select("run_id").distinct().collect()}
     stamp = (now or datetime.now(UTC)).strftime("%Y%m%dT%H%M%SZ")

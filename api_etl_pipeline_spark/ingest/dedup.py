@@ -29,30 +29,34 @@ DEDUP_KEYS = ("source_url", "sha256")
 BLOB_BUCKET = "substring(sha256, 1, 2)"
 
 
-def dedup_insert(new_rows: DataFrame, existing: DataFrame | None, keys=DEDUP_KEYS) -> DataFrame:
-    """J2/S6: rows of `new_rows` whose key tuple is absent from `existing`
-    — the INSERT OR IGNORE semantics. Also dedupes within the batch
-    itself (first occurrence wins is not defined; any one row per key).
-    The result keeps `new_rows`' columns in their order, with or without
-    `existing`: the anti-join takes a condition, because a join `on` the
-    key names would move the keys first."""
-    batch_unique = new_rows.dropDuplicates(list(keys))
+def absent_from(rows: DataFrame, existing: DataFrame | None, keys=DEDUP_KEYS) -> DataFrame:
+    """Rows of `rows` whose key tuple is absent from `existing` (all of
+    them when there is no `existing`), in `rows`' column order: the
+    anti-join takes a condition, because a join `on` the key names would
+    move the keys first."""
     if existing is None:
-        return batch_unique
+        return rows
     on = F.expr(" AND ".join(f"new.`{k}` = old.`{k}`" for k in keys))
-    return batch_unique.alias("new").join(existing.alias("old"), on, "left_anti")
+    return rows.alias("new").join(existing.alias("old"), on, "left_anti")
+
+
+def dedup_insert(new_rows: DataFrame, existing: DataFrame | None, keys=DEDUP_KEYS) -> DataFrame:
+    """J2/S6: the INSERT OR IGNORE semantics. One row per key tuple of
+    `new_rows` (any one of them; first occurrence is not defined), kept
+    only when the key is absent from `existing` (`absent_from`)."""
+    return absent_from(new_rows.dropDuplicates(list(keys)), existing, keys)
 
 
 def write_blobs(df: DataFrame, blob_root: str) -> None:
     """S7: content-addressed blob sink — bytes partitioned by hash prefix.
-    Write-once semantics (blob_store.py:12-13: skip existing paths) =
-    dedupe within the batch AND against the existing sink before the
-    append; the 2-char prefix keeps directory fan-out bounded (256 dirs)
-    and aligns file layout with the dedup shuffle partitioning."""
-    new = df.select("sha256", "body").dropDuplicates(["sha256"])
+    Write-once semantics (blob_store.py:12-13: skip existing paths): the
+    rows of `df`, which the caller keeps to one per `sha256`, whose hash
+    the sink does not hold yet are appended. The 2-char prefix keeps
+    directory fan-out bounded (256 dirs)."""
+    new = df.select("sha256", "body")
     existing = read_sink(new.sparkSession, blob_root, BLOBS_COLUMNS)
     if existing is not None:
-        new = new.join(existing.select("sha256"), "sha256", "left_anti")
+        new = absent_from(new, existing.select("sha256"), ["sha256"])
     new.selectExpr("*", f"{BLOB_BUCKET} AS bucket").write.mode("append").partitionBy(
         "bucket"
     ).parquet(blob_root)

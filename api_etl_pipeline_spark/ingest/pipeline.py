@@ -15,16 +15,26 @@ artifact fetch rows, each carrying its `response_id`, its quarantine
 flag and (artifact rows) its hash, and `checkpoint.eager_checkpoint`
 materializes it. The responses, artifacts and blobs writes and the
 quarantine rows all read that frame instead of each re-running the
-fixture scan, the joins and the JSON parse. The remaining shuffles are
-the dedup anti-joins against the existing sinks.
+fixture scan, the joins and the JSON parse.
 
-The three sink writes run at the same time. None reads another's
-output, and on a few-KB op each is mostly fixed per-job and file-commit
-cost, so one thread per write overlaps them; each thread carries the
-caller's job group and other local properties. The op waits for all
-three and, if any failed, re-raises the first failure. The `runs` row is
-written last, only after all three succeeded: it is the run's commit
-marker.
+Where dedup runs. A plan item yields at most one artifact row (its first
+filing or first search result), so a key can repeat within the batch
+only when the plan has several items; only then do the artifact and blob
+rows go through a `dropDuplicates`. Every op anti-joins them against the
+artifacts and blobs sinks it finds (`dedup.absent_from`); while a sink
+is small, Spark broadcasts it to that join, so a one-item op shuffles
+nothing.
+
+Commit protocol. The three sink writes run at the same time. None reads
+another's output, and on a few-KB op each is mostly fixed per-job and
+file-commit cost, so one thread per write overlaps them; each thread
+carries the caller's job group and other local properties. The op waits
+for all three and, if any failed, re-raises the first failure. Only
+after all three succeeded is the `runs` row written: it is the run's
+commit marker. It is one JSON line, so it skips Spark: it is written
+through the warehouse path's Hadoop FileSystem under a hidden name and
+renamed to a visible part file (`storage.append_json_row`), which costs
+no job.
 
 One parse per frame. Building a frame costs a py4j round trip per
 DataFrame or Column call, and on one op's few-KB input that driver time
@@ -56,6 +66,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass
+from datetime import UTC, datetime
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -64,8 +75,8 @@ from pyspark.sql import functions as F
 from api_etl_pipeline_spark._fastlit import sql_str
 from api_etl_pipeline_spark.checkpoint import eager_checkpoint
 from api_etl_pipeline_spark.ingest import parse as P
-from api_etl_pipeline_spark.ingest.capture import run_row
-from api_etl_pipeline_spark.ingest.dedup import BLOB_BUCKET, dedup_insert, write_blobs
+from api_etl_pipeline_spark.ingest.capture import run_record
+from api_etl_pipeline_spark.ingest.dedup import BLOB_BUCKET, DEDUP_KEYS, absent_from, write_blobs
 from api_etl_pipeline_spark.ingest.sources import (
     FIXTURE_COLUMNS,
     SYNTH_HEADERS,
@@ -73,7 +84,7 @@ from api_etl_pipeline_spark.ingest.sources import (
     fixture_files,
     plan_values,
 )
-from api_etl_pipeline_spark.ingest.storage import ARTIFACTS_COLUMNS, read_sink
+from api_etl_pipeline_spark.ingest.storage import ARTIFACTS_COLUMNS, append_json_row, read_sink
 
 PROVIDERS = ("sec_edgar", "nrc_adams_aps")
 RESPONSE_COLS = ["provider", "method", "url", "params_json", "status_code", "headers_json", "body"]
@@ -124,7 +135,9 @@ def _artifact_fixture(provider: str) -> str:
     return "artifact.htm" if provider == "sec_edgar" else "document.pdf"
 
 
-def _fetch_batch(spark: SparkSession, provider: str, fixture_root: str, limit: int) -> DataFrame:
+def _fetch_batch(
+    spark: SparkSession, provider: str, fixture_root: str, plan: list[dict]
+) -> DataFrame:
     """Stages 1-4 as one statement, materialized: the metadata and
     artifact fetch rows (`artifact` tells them apart), with `parse_error`
     on the metadata rows and `sha256`/`bytes` on the artifact rows.
@@ -135,7 +148,7 @@ def _fetch_batch(spark: SparkSession, provider: str, fixture_root: str, limit: i
     again. No filter lands on the fixture side of either join, so the
     two broadcasts plan alike and Spark reuses one: the fixtures are
     scanned and broadcast once per run."""
-    values, args = plan_values(_default_plan(provider), limit)
+    values, args = plan_values(plan, len(plan))
     schema, extract = P.EXTRACT[provider]
     # nested subqueries, not a WITH clause: written with CTEs, the
     # statement takes Spark ~1.5x as long to analyze
@@ -202,12 +215,21 @@ def run_offline_ingest(
     if provider not in PROVIDERS:
         raise KeyError(f"unknown provider {provider!r}; known: {PROVIDERS}")
 
-    batch = _fetch_batch(spark, provider, fixture_root, limit)
+    plan = _default_plan(provider)[: max(limit, 1)]  # the reference's min-1 guard (F11)
+    batch = _fetch_batch(spark, provider, fixture_root, plan)
     hashed = batch.where("artifact AND body IS NOT NULL")
 
-    # stage 5: dedup insert (S6/J2) against the existing sink, if any
+    # stage 5: dedup insert (S6/J2). A plan item yields at most one
+    # artifact row, so only a plan of several items can repeat a key
+    # within the batch; then one row per key goes on, and the anti-joins
+    # drop the keys the sinks already hold.
+    artifact_rows = hashed.selectExpr(*_artifact_columns(provider))
+    blob_rows = hashed.select("sha256", "body")
+    if len(plan) > 1:
+        artifact_rows = artifact_rows.dropDuplicates(list(DEDUP_KEYS))
+        blob_rows = blob_rows.dropDuplicates(["sha256"])
     existing = read_sink(spark, f"{warehouse}/artifacts", ARTIFACTS_COLUMNS) if warehouse else None
-    new_artifacts = dedup_insert(hashed.selectExpr(*_artifact_columns(provider)), existing)
+    new_artifacts = absent_from(artifact_rows, existing)
 
     if warehouse is None:
         counts = batch.selectExpr("count(1) AS n", "count_if(parse_error) AS errors").first()
@@ -224,11 +246,10 @@ def run_offline_ingest(
         spark,
         lambda: responses.write.mode("append").parquet(f"{warehouse}/responses"),
         lambda: artifacts.write.mode("append").parquet(f"{warehouse}/artifacts"),
-        lambda: write_blobs(hashed, f"{warehouse}/blobs"),
+        lambda: write_blobs(blob_rows, f"{warehouse}/blobs"),
     )
     n_resp, n_err = int(obs_resp.get["n"]), int(obs_resp.get["errors"])
     n_art = int(obs_art.get["n"])
-    run_row(spark, run_id, "succeeded", n_resp, n_art, n_err).write.mode("append").json(
-        f"{warehouse}/runs"
-    )
+    record = run_record(run_id, "succeeded", n_resp, n_art, n_err, datetime.now(UTC))
+    append_json_row(spark, f"{warehouse}/runs", record)
     return IngestResult(n_resp, n_art, n_err, new_artifacts, batch)

@@ -138,7 +138,7 @@ def decon01_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     grams = (
         _hashed_word_ngrams
-        if _corpus_bytes(sf_dir) > DECON01_HASH_MIN_BYTES
+        if _corpus_bytes(d) > DECON01_HASH_MIN_BYTES
         else _word_ngrams
     )
     per_doc = d.select(

@@ -1798,21 +1798,14 @@ DD18_T_NUM, DD18_T_DEN = 1, 2  # threshold t = 1/2, kept RATIONAL so the
 DD18_BCAST_MAX_BYTES = 4 << 20
 
 
-def _corpus_bytes(sf_dir: str) -> int:
-    """On-disk bytes of the documents table (file or directory); huge
-    sentinel when unknowable (catalog: scheme, missing path) so the
-    dispatch degrades to the scale arm, never the broadcast arm."""
-    import pathlib
-
-    p = pathlib.Path(str(sf_dir)) / "documents.parquet"
-    try:
-        if p.is_file():
-            return p.stat().st_size
-        if p.is_dir():
-            return sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
-    except OSError:
-        pass
-    return 1 << 62
+def _corpus_bytes(documents: DataFrame) -> int:
+    """Bytes of the documents relation, from its optimized plan's size
+    statistics: the data files' bytes for a path or a `catalog:` table,
+    read from file metadata with no Spark job. A relation whose size Spark
+    does not know reports `spark.sql.defaultSizeInBytes` (Long.MaxValue
+    by default), so the dispatch degrades to the scale arm, never the
+    broadcast arm."""
+    return int(documents._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 @query(
@@ -1908,9 +1901,8 @@ def dd18_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; pairs, never documents, shuffle afterward."""
     from api_etl_pipeline_spark.checkpoint import lazy_checkpoint
 
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("toks")
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    d = docs.select("doc_id", F.split("text", " ").alias("toks"))
     toks = F.col("toks")
     shingles = F.when(
         F.size(toks) >= 5,
@@ -1956,7 +1948,7 @@ def dd18_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = pref.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = pref.select(F.col("doc_id").alias("doc_b"), "shingle")
-    if _corpus_bytes(sf_dir) <= DD18_BCAST_MAX_BYTES:
+    if _corpus_bytes(docs) <= DD18_BCAST_MAX_BYTES:
         b = F.broadcast(b)
     cand = (
         a.join(b, "shingle")

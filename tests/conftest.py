@@ -41,3 +41,24 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture
+def managed_tables(spark):
+    """A fresh table-name prefix. Each `<prefix><table>` is dropped and
+    its warehouse directory removed after the test, pass or fail: the
+    files outlive the in-memory catalog and would make a later
+    saveAsTable fail with LOCATION_ALREADY_EXISTS."""
+    import shutil
+    import uuid
+
+    from api_etl_pipeline_spark.tables import TABLES
+
+    prefix = f"b{uuid.uuid4().hex[:8]}_"
+    try:
+        yield prefix
+    finally:
+        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        for name in TABLES:
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}{name}")
+            shutil.rmtree(f"{warehouse}/{prefix}{name}", ignore_errors=True)

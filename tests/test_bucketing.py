@@ -9,9 +9,6 @@ through `catalog:` bucketed tables than through the path layout.
 
 from __future__ import annotations
 
-import shutil
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,22 +17,6 @@ from api_etl_pipeline_spark.ops import plan_lint
 from api_etl_pipeline_spark.registry import all_queries
 from api_etl_pipeline_spark.tables import TABLES, load_table
 from tests.conftest import SF_DIR, SF_SMOKE
-
-
-@pytest.fixture
-def managed_tables(spark):
-    """A fresh table-name prefix. Each `<prefix><table>` is dropped and
-    its warehouse directory removed after the test, pass or fail: the
-    files outlive the in-memory catalog and would make a later
-    saveAsTable fail with LOCATION_ALREADY_EXISTS."""
-    prefix = f"b{uuid.uuid4().hex[:8]}_"
-    try:
-        yield prefix
-    finally:
-        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        for name in TABLES:
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}{name}")
-            shutil.rmtree(f"{warehouse}/{prefix}{name}", ignore_errors=True)
 
 
 @pytest.fixture

@@ -295,18 +295,20 @@ def test_plan_source_is_local_and_binds_values(spark):
 
 
 # jobs one warm op runs on a local[4] session, the same in every measured
-# repeat: the fixture broadcast, the batch checkpoint, the four sink
-# writes and the query stages of the two dedup anti-joins
-WARM_OP_MAX_JOBS = 10
-# the jobs every warm op runs whatever the plans: the fixture broadcast,
-# the batch checkpoint and the four sink writes. Sink writes that lost
-# the caller's job group would leave 3 in it (broadcast, checkpoint, runs)
-WARM_OP_MIN_JOBS = 6
+# repeat: the fixture broadcast, the batch checkpoint, the three sink
+# writes and the broadcasts of the artifacts and blobs sinks that the two
+# dedup anti-joins build on. The runs row is committed through the
+# Hadoop FileSystem and runs no job
+WARM_OP_MAX_JOBS = 7
+# the jobs every warm op runs whatever the join plans: the fixture
+# broadcast, the batch checkpoint and the three sink writes. Sink writes
+# that lost the caller's job group would leave 2 in it
+WARM_OP_MIN_JOBS = 5
 # py4j round trips one warm op makes from its own thread and its sink
-# writer threads: 260 measured on PySpark 4.1.2, 170 of them on the op's
-# thread (243 with the writes run one after another on the op's thread;
-# 1,954 with call-site capture on and the stages built call by call on
-# the Column API)
+# writer threads: 266 measured on PySpark 4.1.2 (260 with the runs row
+# written by Spark; 243 with the writes run one after another on the
+# op's thread; 1,954 with call-site capture on and the stages built call
+# by call on the Column API)
 WARM_OP_MAX_PY4J = 300
 
 
@@ -387,6 +389,52 @@ def test_unreadable_artifacts_sink_raises(spark, tmp_path):
     assert list(_status_settled(spark).getActiveJobsIds()) == []
     runs = spark.read.json(str(wh / "runs")).collect()
     assert [r.run_id for r in runs] == ["run-0001"]
+
+
+def test_multi_item_plan_dedups_within_batch(spark, tmp_path, monkeypatch):
+    """Two plan items over the same fixture fetch one artifact twice: both
+    fetches are captured, and one row per (source_url, sha256) key goes
+    to the artifacts and blobs sinks, with and without a warehouse."""
+    from api_etl_pipeline_spark.ingest import pipeline
+
+    item = pipeline._default_plan("sec_edgar")[0]
+    monkeypatch.setattr(pipeline, "_default_plan", lambda provider: [item, item])
+    wh = tmp_path / "wh"
+    res = run_offline_ingest(spark, "sec_edgar", FIXTURES, warehouse=str(wh), limit=2)
+    assert (res.responses, res.artifacts, res.parse_errors) == (4, 1, 0)
+    assert spark.read.parquet(str(wh / "responses")).count() == 4
+    assert spark.read.parquet(str(wh / "artifacts")).count() == 1
+    assert spark.read.parquet(str(wh / "blobs")).count() == 1
+    res = run_offline_ingest(spark, "sec_edgar", FIXTURES, limit=2)
+    assert (res.responses, res.artifacts, res.parse_errors) == (4, 1, 0)
+    assert res.artifacts_df.count() == 1
+
+
+def test_runs_row_commit_reads_like_spark_json(spark, tmp_path):
+    """A runs row committed through the Hadoop FileSystem reads back with
+    the schema and values of the same row written by Spark's JSON writer,
+    `finished_at` text included, and leaves no temp file behind."""
+    from datetime import UTC, datetime
+
+    from api_etl_pipeline_spark.ingest.capture import run_record, run_summary
+    from api_etl_pipeline_spark.ingest.storage import append_json_row
+
+    finished = datetime(2025, 7, 15, 9, 30, 0, 123456, tzinfo=UTC)
+    by_fs, by_spark = tmp_path / "fs", tmp_path / "spark"
+    for run_id in ("run-0001", "run-0002"):
+        append_json_row(spark, str(by_fs), run_record(run_id, "succeeded", 2, 1, 0, finished))
+        summary = run_summary(spark.range(2), spark.range(1), spark.range(0), run_id, "succeeded")
+        summary.withColumn("finished_at", F.lit(finished)).write.mode("append").json(
+            str(by_spark)
+        )
+    got, want = spark.read.json(str(by_fs)), spark.read.json(str(by_spark))
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert {r.finished_at for r in got.collect()} == {"2025-07-15T09:30:00.123Z"}
+    names = sorted(p.name for p in by_fs.iterdir())
+    visible = [n for n in names if not n.startswith((".", "_"))]
+    assert len(visible) == 2 and all(n.startswith("part-") for n in visible), names
+    assert not [n for n in names if n.startswith("_")], names
 
 
 def test_artifacts_part_files_share_column_order(spark, tmp_path):

@@ -71,13 +71,23 @@ def test_x26_bucket_width_invariance(spark, monkeypatch):
     assert len(outs[0]) == 3  # one row per return flag
 
 
-def test_corpus_bytes_unknown_path_is_scale_arm():
-    """_corpus_bytes degrades to the scale arm (huge sentinel), never the
-    broadcast arm, for catalog: schemes and missing paths."""
-    from api_etl_pipeline_spark.llm_ops.dedup import _corpus_bytes
+def test_catalog_corpus_picks_local_path_arm(spark, managed_tables):
+    """The size dispatches read the documents relation's plan statistics,
+    so a small `catalog:` corpus takes the same dd18 and decon01 arms as
+    its path layout, and a relation of unknown size takes the scale arm."""
+    from api_etl_pipeline_spark.llm_ops.curation import DECON01_HASH_MIN_BYTES
+    from api_etl_pipeline_spark.llm_ops.dedup import DD18_BCAST_MAX_BYTES, _corpus_bytes
+    from api_etl_pipeline_spark.tables import load_table
 
-    assert _corpus_bytes("catalog:spark_graft_probe_") > 1 << 60
-    assert _corpus_bytes("/nonexistent/path") > 1 << 60
+    docs = load_table(spark, SF, "documents")
+    docs.write.format("parquet").saveAsTable(f"{managed_tables}documents")
+    local = _corpus_bytes(docs)
+    catalog = _corpus_bytes(load_table(spark, f"catalog:{managed_tables}", "documents"))
+    assert 0 < local <= DD18_BCAST_MAX_BYTES  # the broadcast arm
+    for bound in (DD18_BCAST_MAX_BYTES, DECON01_HASH_MIN_BYTES):
+        assert (catalog <= bound) == (local <= bound), (catalog, local, bound)
+    unknown = spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "x int")
+    assert _corpus_bytes(unknown) > DECON01_HASH_MIN_BYTES > DD18_BCAST_MAX_BYTES
 
 
 def test_sim01_truth_shared_build_consistency(spark):
